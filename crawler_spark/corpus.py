@@ -1442,8 +1442,14 @@ def bm25_topk(
     order-nondeterministic).  Global top-k is orderBy+limit —
     TakeOrdered, not a single-partition window; ties broken by doc_id.
 
+    A token repeated in ``query_tokens`` counts once; an empty query
+    raises ``ValueError``.
+
     Output: (doc_id, dl, score) — the topk highest-scoring docs.
     """
+    query_tokens = list(dict.fromkeys(query_tokens))
+    if not query_tokens:
+        raise ValueError("bm25_topk needs at least one query token")
     p = postings(docs, query_tokens)
     stats = (
         with_tokens(docs.filter(F.trim("text") != ""))

@@ -20,19 +20,21 @@ Scale shape (100 TB / 10^8 hosts): the edges table is the big side and
 is NEVER shuffled — each iteration joins edges to the (hosts-sized)
 rank table and aggregates contributions by dst with map-side partial
 aggregation, so the only full shuffle per iteration carries one partial
-row per (partition, dst-host).  The rank table is broadcast when it
-fits (the default here; 10^6 hosts * 24 B is trivially broadcastable);
-above ``spark.sql.autoBroadcastJoinThreshold`` Spark falls back to a
-shuffled hash join on src — still edges-shuffle-free if edges are
-bucketed by src (see BENCH/bucketed_join_demo.py for the pattern).
-Dangling mass is a 1-row aggregate collected per iteration (a bounded
-driver probe, same convention as the engine's round metrics).
+row per (partition, dst-host).  Spark broadcasts the rank side below
+``spark.sql.autoBroadcastJoinThreshold`` and shuffles it above; with
+edges bucketed by src that is still edges-shuffle-free (see
+BENCH/bucketed_join_demo.py).  Dangling mass is a 1-row aggregate
+collected per iteration (a bounded driver probe, same convention as the
+engine's round metrics).  Both iterative operators here run on
+:func:`crawler_spark.fixpoint.fixpoint`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .fixpoint import checkpoint, fixpoint, release
 
 PPB = 1_000_000_000
 
@@ -56,9 +58,8 @@ def pagerank_fixedpoint(
     rank mass <= PPB + N (one ulp of truncation per node), so
     ``d * (S + D div N) < 8.5e8 * ~1e9 << 2^63``.
 
-    Returns (node: string, out_deg: bigint, rank_ppb: bigint).  The
-    returned frame is persisted (it pins the last iteration); callers
-    own the cache lifetime.
+    Returns (node: string, out_deg: bigint, rank_ppb: bigint),
+    checkpointed; release it with :func:`crawler_spark.fixpoint.release`.
     """
     e = edges.select("src", "dst")
     nodes = (
@@ -69,60 +70,41 @@ def pagerank_fixedpoint(
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
-    nd = (
-        nodes.join(deg, "node", "left")
-        .select("node", F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"))
-        .persist()
+    nd = nodes.join(deg, "node", "left").select(
+        "node", F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg")
     )
-    n_nodes = nd.count()  # bounded driver probe; also materializes the persist
+    n_nodes = nd.count()  # bounded driver probe
     base = (PPB - damping_ppb) // n_nodes
 
-    ranks = nd.withColumn("rank_ppb", F.lit(PPB // n_nodes).cast("long"))
-    prev = None
-    for _ in range(iters):
-        ranks = ranks.persist()
-        dangling = ranks.filter(F.col("out_deg") == 0).agg(
+    def step(ranks: DataFrame) -> DataFrame:
+        d_mass = ranks.filter(F.col("out_deg") == 0).agg(
             F.coalesce(F.sum("rank_ppb"), F.lit(0)).alias("d")
-        )
-        d_mass = dangling.collect()[0]["d"] or 0
+        ).first()["d"]
         contribs = (
             e.join(
-                F.broadcast(
-                    ranks.filter(F.col("out_deg") > 0).select(
-                        F.col("node").alias("src"),
-                        F.expr("rank_ppb div out_deg").alias("contrib"),
-                    )
+                ranks.filter(F.col("out_deg") > 0).select(
+                    F.col("node").alias("src"),
+                    F.expr("rank_ppb div out_deg").alias("contrib"),
                 ),
                 "src",
             )
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("contrib").alias("s"))
         )
-        new_ranks = (
-            nd.join(contribs, "node", "left")
-            .select(
-                "node",
-                "out_deg",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_ppb} * (coalesce(s, 0) + {d_mass // n_nodes}))"
-                        f" div {PPB}"
-                    )
-                ).cast("long").alias("rank_ppb"),
-            )
+        return ranks.select("node", "out_deg").join(contribs, "node", "left").select(
+            "node",
+            "out_deg",
+            (
+                F.lit(base)
+                + F.expr(
+                    f"({damping_ppb} * (coalesce(s, 0) + {d_mass // n_nodes}))"
+                    f" div {PPB}"
+                )
+            ).cast("long").alias("rank_ppb"),
         )
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
-        ranks = new_ranks
-    # pin the result before releasing the lineage inputs it references
-    out = ranks.persist()
-    out.count()
-    if prev is not None:
-        prev.unpersist()
-    nd.unpersist()
-    return out
+
+    init = nd.withColumn("rank_ppb", F.lit(PPB // n_nodes).cast("long"))
+    return fixpoint(step, init, iters)
 
 
 def rank_priority(frontier: DataFrame, ranks: DataFrame, n_tiers: int = 8) -> DataFrame:
@@ -161,43 +143,6 @@ def rank_priority(frontier: DataFrame, ranks: DataFrame, n_tiers: int = 8) -> Da
     )
 
 
-def _pinned_rdd_ids(spark) -> set[int]:
-    """Ids of currently persisted RDDs (cache + checkpoint blocks)."""
-    return {
-        int(i)
-        for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
-
-
-class _Ckpt:
-    """``localCheckpoint`` with a RELEASABLE handle.
-
-    Checkpoint blocks are persisted OUTSIDE the CacheManager, so
-    ``DataFrame.unpersist()`` is a **no-op** for them (empirically: the
-    id stays in ``getPersistentRDDs`` through blocking unpersist and a
-    JVM GC) — in a long-lived session an iterative operator would pin
-    every round's frame until the ContextCleaner eventually notices the
-    dropped reference.  This wrapper diffs the pinned-id set around the
-    checkpoint and releases those exact blocks via
-    ``SparkContext.unpersistRDD`` — deterministic, blocking, and safe
-    once every DERIVED checkpoint has been materialized (a
-    localCheckpoint cuts lineage, so blocks must never be dropped while
-    a live frame still scans them).
-    """
-
-    def __init__(self, df: DataFrame):
-        self.spark = df.sparkSession
-        before = _pinned_rdd_ids(self.spark)
-        self.df = df.localCheckpoint(eager=True)
-        self.ids = _pinned_rdd_ids(self.spark) - before
-
-    def release(self) -> None:
-        jsc = self.spark.sparkContext._jsc.sc()
-        for i in self.ids:
-            jsc.unpersistRDD(i, True)
-        self.ids = set()
-
-
 def connected_components(
     edges: DataFrame,
     src_col: str = "src",
@@ -224,38 +169,24 @@ def connected_components(
     The ``hop`` term is the pointer-doubling shortcut: label chains
     halve every round, so convergence is O(log diameter) rounds, not
     O(diameter) — the difference between ~40 and ~12 rounds on a
-    10^10-node web graph.  Each round materializes the labels frame
-    with ``localCheckpoint`` (slim: 16 B/node) to truncate lineage —
-    without it the plan tree doubles per round and analysis time
-    dominates (the kmeans lesson); on a real cluster prefer a reliable
-    ``checkpoint`` dir so executor loss cannot drop blocks.  The
-    changed-row count per round is a bounded driver probe (one long),
-    the same convention as PageRank's dangling-mass probe.
+    10^10-node web graph.  Each round's (node, label, changed) frame is
+    checkpointed once and serves as both the next state and the
+    convergence probe (one ``changed`` row or none).  ``edges`` is
+    often an EXPENSIVE lazy plan (here: the MinHash + SimHash banded
+    near-dup pipelines), so it is checkpointed once up front and every
+    round's neighbor join reads materialized (u, v) longs.
 
-    ``edges`` is often an EXPENSIVE lazy plan (here: the MinHash +
-    SimHash banded near-dup pipelines) — it is materialized ONCE up
-    front, so each round's neighbor join reads checkpointed (u,v)
-    longs instead of re-running the producer; likewise each round
-    checkpoints (node, new_label, label) in one pass so the
-    convergence probe is a scan of materialized rows, not a second
-    execution of the round's joins.  With edges bucketed by src the
-    label shuffle is the only exchange per round.
-
-    Output: (node, component) for every distinct endpoint.
+    Output: (node, component) for every distinct endpoint, checkpointed
+    (see :func:`crawler_spark.fixpoint.release`).  Raises
+    ``RuntimeError`` if labels still change after ``max_rounds``.
     """
     e = edges.select(
         F.col(src_col).cast("long").alias("u"),
         F.col(dst_col).cast("long").alias("v"),
     )
-    symc = _Ckpt(e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
-    sym = symc.df
-    labc = _Ckpt(
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(max_rounds):
-        labels = labc.df
+    sym = checkpoint(e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (
             sym.join(labels, sym["v"] == labels["node"])
             .groupBy(sym["u"].alias("node"))
@@ -267,35 +198,30 @@ def connected_components(
         hop = labels.join(
             l2, labels["label"] == l2["l_node"], "left"
         ).select("node", "label", F.col("l_label").alias("hlabel"))
-        newc = _Ckpt(
-            hop.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("hlabel"), F.col("label")),
-                    F.coalesce(F.col("nlabel"), F.col("label")),
-                ).alias("new_label"),
-                "label",
-            )
+        new = F.least(
+            F.col("label"),
+            F.coalesce(F.col("hlabel"), F.col("label")),
+            F.coalesce(F.col("nlabel"), F.col("label")),
         )
-        changed = (
-            newc.df.filter(F.col("new_label") != F.col("label"))
-            .limit(1)
-            .count()
+        return hop.join(nbr, "node", "left").select(
+            "node", new.alias("label"), (new != F.col("label")).alias("changed")
         )
-        nxtc = _Ckpt(newc.df.select("node", F.col("new_label").alias("label")))
-        # nxt is materialized and self-contained -> the previous round's
-        # blocks (and this round's 3-column frame) can be dropped NOW
-        newc.release()
-        labc.release()
-        labc = nxtc
-        if changed == 0:
-            break
-    symc.release()
-    # the final labels frame stays pinned (callers own its lifetime,
-    # same convention as pagerank_fixedpoint's returned frame)
-    return labc.df.select("node", F.col("label").alias("component"))
+
+    init = (
+        sym.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label"), F.lit(True).alias("changed"))
+    )
+    try:
+        labels = fixpoint(
+            step, init, max_rounds, done=lambda s: s.filter("changed").isEmpty()
+        )
+    finally:
+        release(sym)
+    try:
+        return checkpoint(labels.select("node", F.col("label").alias("component")))
+    finally:
+        release(labels)
 
 
 def anchor_texts(

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .fixpoint import checkpoint, fixpoint, release
+
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
     "cast(0.0 as double), (acc, v) -> acc + v)"
@@ -492,15 +494,13 @@ def kmeans_lloyd(
     k-group mean agg (partial map-side: reducers see partitions x k x
     dim partials, never rows).  Per-dim means round to 9 decimals on
     both engines so float summation-order noise (~1e-15) can never
-    leak into the next iteration's distances.  At 100 TB the slim
-    (id, vector) projection would be cached/checkpointed once and
-    re-scanned per iteration; nothing else grows with corpus size.
+    leak into the next iteration's distances.  The k centroids are the
+    :func:`crawler_spark.fixpoint.fixpoint` state; at 100 TB the slim
+    (id, vector) projection would be checkpointed once as well.
 
-    Output: (id_col, cluster: bigint, d2: double).
+    Output: (id_col, cluster: bigint, d2: double), checkpointed.
     """
-    spark = emb.sparkSession
     dim = len(emb.select(vec_col).first()[0])
-    cents = frozen_centroids(emb, centroid_ids, id_col, vec_col)
     mean_cols = F.array(
         *[
             F.round(
@@ -509,25 +509,28 @@ def kmeans_lloyd(
             for i in range(dim)
         ]
     ).alias("cvec")
-    for _ in range(iters):
+
+    def step(cents: DataFrame) -> DataFrame:
         a = centroid_assign(emb, cents, id_col, vec_col).select(
             id_col, F.col("cluster_id").alias("cid")
         )
-        # k rows of k x dim rounded means: a bounded driver probe (same
-        # budget class as the IVF fit sample) that TRUNCATES the lineage
-        # — without it the logical plan doubles per iteration and
-        # analysis dominates; with it each iteration is exactly one
-        # corpus scan + a k-group partial agg at any corpus size
-        rows = (
+        return (
             a.join(emb.select(id_col, vec_col), id_col)
             .groupBy("cid")
             .agg(mean_cols)
-            .collect()
         )
-        cents = spark.createDataFrame(rows, "cid long, cvec array<double>")
-    return centroid_assign(emb, cents, id_col, vec_col).select(
-        id_col, F.col("cluster_id").alias("cluster"), "d2"
+
+    cents = fixpoint(
+        step, frozen_centroids(emb, centroid_ids, id_col, vec_col), iters
     )
+    try:
+        return checkpoint(
+            centroid_assign(emb, cents, id_col, vec_col).select(
+                id_col, F.col("cluster_id").alias("cluster"), "d2"
+            )
+        )
+    finally:
+        release(cents)
 
 
 def ivf_topk_frozen(

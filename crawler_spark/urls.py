@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from .fixpoint import checkpoint, fixpoint, release
+
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
 
@@ -338,44 +340,50 @@ def resolve_redirects(edges, max_doublings: int = 4):
     Scale: each round is one equi-join of the current pointer table
     with itself on the pointed-to key (hash-partitioned both sides, no
     broadcast needed at any size) plus an integer hop add; rounds =
-    ``max_doublings`` regardless of corpus size.  Output: (url,
-    final_url, hops, status['ok'|'loop']) for every redirecting url.
+    ``max_doublings`` regardless of corpus size, each checkpointed by
+    :func:`crawler_spark.fixpoint.fixpoint`.  Output: (url, final_url,
+    hops, status['ok'|'loop']) for every redirecting url, checkpointed.
 
     Determinism: pure pointer arithmetic on strings + integer hop
     sums — no floats, no ordering sensitivity.
     """
-    # ptr(url) = where url's pointer currently rests; hops = distance
-    ptr = edges.select(
-        F.col("src").alias("url"),
-        F.col("dst").alias("p"),
-        F.lit(1).cast("long").alias("hops"),
-    )
-    for _ in range(max_doublings):
+
+    def step(ptr):
+        # ptr(url) = where url's pointer currently rests; hops = distance
         nxt = ptr.select(
             F.col("url").alias("p"),
             F.col("p").alias("p2"),
             F.col("hops").alias("h2"),
         )
-        ptr = (
-            ptr.join(nxt, "p", "left")
-            .select(
+        return ptr.join(nxt, "p", "left").select(
+            "url",
+            F.coalesce("p2", "p").alias("p"),
+            (F.col("hops") + F.coalesce("h2", F.lit(0))).alias("hops"),
+        )
+
+    ptr = fixpoint(
+        step,
+        edges.select(
+            F.col("src").alias("url"),
+            F.col("dst").alias("p"),
+            F.lit(1).cast("long").alias("hops"),
+        ),
+        max_doublings,
+    )
+    still = edges.select(F.col("src").alias("p"), F.lit(True).alias("__redir"))
+    try:
+        return checkpoint(
+            ptr.join(still, "p", "left").select(
                 "url",
-                F.coalesce("p2", "p").alias("p"),
-                (F.col("hops") + F.coalesce("h2", F.lit(0))).alias("hops"),
+                F.col("p").alias("final_url"),
+                "hops",
+                F.when(F.col("__redir").isNotNull(), F.lit("loop"))
+                .otherwise(F.lit("ok"))
+                .alias("status"),
             )
         )
-    still = edges.select(F.col("src").alias("p"), F.lit(True).alias("__redir"))
-    return (
-        ptr.join(still, "p", "left")
-        .select(
-            "url",
-            F.col("p").alias("final_url"),
-            "hops",
-            F.when(F.col("__redir").isNotNull(), F.lit("loop"))
-            .otherwise(F.lit("ok"))
-            .alias("status"),
-        )
-    )
+    finally:
+        release(ptr)
 
 
 # Representative snapshot subset of the publicsuffix.org list: enough
@@ -386,8 +394,7 @@ def resolve_redirects(edges, max_doublings: int = 4):
 PSL_RULES = [
     "com", "org", "net", "edu", "gov", "io", "jp", "uk", "au", "br",
     "us", "ck",                    # NB: real PSL has no bare 'ck' —
-    # kept OUT below; see _psl_entries.  Bare TLDs above are normal
-    # 1-label rules.
+    # removed below.  Bare TLDs above are normal 1-label rules.
     "co.uk", "gov.uk", "ac.uk", "co.jp", "ne.jp", "com.au", "com.br",
     "k12.ma.us",                   # 3-label normal rule
     "github.io",                   # private-section style entry
@@ -411,22 +418,19 @@ def psl_entries(rules: list[str] | None = None) -> list[tuple[str, int, int, int
       leftmost label)
 
     ``rule_labels`` is the prevailing-rule length used for
-    longest-match ordering (wildcard counts its ``*``).
+    longest-match ordering (wildcard counts its ``*``).  Rules that
+    compile to one key (normal ``ck`` beside wildcard ``*.ck``) keep one
+    row, the max ``(exc, rule_labels, ps_labels)`` — the rule that would
+    prevail — so the lookup join never duplicates a host.
     """
-    out = []
+    best: dict[str, tuple[int, int, int]] = {}
     for r in rules if rules is not None else PSL_RULES:
-        if r.startswith("!"):
-            body = r[1:]
-            n = body.count(".") + 1
-            out.append((body, 1, n, n - 1))
-        elif r.startswith("*."):
-            body = r[2:]
-            n = body.count(".") + 2
-            out.append((body, 0, n, n))
-        else:
-            n = r.count(".") + 1
-            out.append((r, 0, n, n))
-    return out
+        exc, wild = r.startswith("!"), r.startswith("*.")
+        key = r[1:] if exc else r[2:] if wild else r
+        n = key.count(".") + 1 + wild
+        score = (int(exc), n, n - exc)
+        best[key] = max(best.get(key, score), score)
+    return [(k, *v) for k, v in best.items()]
 
 
 def registrable_domain(

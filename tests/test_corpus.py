@@ -456,6 +456,13 @@ def test_bm25_ranking_semantics(spark):
     assert ids[0] == 3                          # both terms, shortest doc
     assert score[1] > score[2]                  # rare term beats extra tf
     assert score[2] > score[5]                  # same tf, shorter dl wins
+    # a repeated query token counts once; an empty query is an error
+    dup = corpus.bm25_topk(docs, ["rare", "common", "rare"], topk=10).collect()
+    assert [(r["doc_id"], r["score"]) for r in dup] == [
+        (r["doc_id"], r["score"]) for r in out
+    ]
+    with pytest.raises(ValueError):
+        corpus.bm25_topk(docs, [], topk=10)
 
 
 def test_postings_pushes_term_filter(spark):

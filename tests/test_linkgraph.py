@@ -1,10 +1,14 @@
 """Fixed-point PageRank (linkgraph.pagerank_fixedpoint): hand-computed
 one-iteration ranks on a 3-node graph with a dangling node, exact
-determinism across reruns and partitionings, and cache hygiene."""
+determinism across reruns, partitionings and join strategies; connected
+components; and cache hygiene of every fixpoint operator."""
 
 from __future__ import annotations
 
+import pytest
+
 from crawler_spark import linkgraph
+from crawler_spark.fixpoint import checkpoint, release
 
 
 def _edges(spark, rows):
@@ -22,7 +26,7 @@ def test_pagerank_one_iteration_hand_values(spark):
     e = _edges(spark, [("A", "B"), ("A", "C"), ("B", "A")])
     out = linkgraph.pagerank_fixedpoint(e, iters=1)
     got = {r["node"]: (r["out_deg"], r["rank_ppb"]) for r in out.collect()}
-    out.unpersist()
+    release(out)
     assert got == {
         "A": (2, 427_777_777),
         "B": (1, 286_111_110),
@@ -33,40 +37,34 @@ def test_pagerank_one_iteration_hand_values(spark):
 def test_pagerank_deterministic_across_partitionings(spark):
     """Integer arithmetic makes ranks EXACTLY partitioning-invariant —
     the property that lets the same job produce the same bytes at N and
-    4N executors (floats would differ in summation order)."""
+    4N executors (floats would differ in summation order).  The same
+    holds when the rank side is too big to broadcast: with
+    autoBroadcastJoinThreshold=-1 Spark shuffles it instead."""
     rows = [
         (f"h{i % 7}", f"h{(i * 3 + 1) % 7}") for i in range(40)
     ] + [("h0", "leaf"), ("h3", "leaf")]
     rows = [r for r in rows if r[0] != r[1]]
-    a = linkgraph.pagerank_fixedpoint(
-        _edges(spark, rows).repartition(1), iters=4
-    )
-    b = linkgraph.pagerank_fixedpoint(
-        _edges(spark, rows).repartition(8), iters=4
-    )
-    ra = sorted((r["node"], r["rank_ppb"]) for r in a.collect())
-    rb = sorted((r["node"], r["rank_ppb"]) for r in b.collect())
-    a.unpersist()
-    b.unpersist()
-    assert ra == rb
+
+    def ranks(parts):
+        out = linkgraph.pagerank_fixedpoint(
+            _edges(spark, rows).repartition(parts), iters=4
+        )
+        got = sorted((r["node"], r["rank_ppb"]) for r in out.collect())
+        release(out)
+        return got
+
+    ra, rb = ranks(1), ranks(8)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        rc = ranks(8)
+    finally:
+        spark.conf.set(key, prior)
+    assert ra == rb == rc
     # total mass stays ~PPB (truncation loses < 1 ppb per node per iter)
     total = sum(v for _, v in ra)
     assert abs(total - linkgraph.PPB) < 10 * len(ra)
-
-
-def test_pagerank_releases_intermediate_caches(spark):
-    """Only the returned frame stays pinned (documented caller-owned
-    lifetime); the per-iteration intermediates are unpersisted."""
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    out = linkgraph.pagerank_fixedpoint(
-        _edges(spark, [("A", "B"), ("B", "A")]), iters=2
-    )
-    out.collect()
-    during = len(spark.sparkContext._jsc.getPersistentRDDs())
-    out.unpersist()
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    assert during <= before + 1
-    assert after <= before
 
 
 def test_rank_priority_feeds_scheduler_order(spark):
@@ -89,7 +87,7 @@ def test_rank_priority_feeds_scheduler_order(spark):
         r["host"]: r["priority"]
         for r in linkgraph.rank_priority(fr, ranks, n_tiers=4).collect()
     }
-    ranks.unpersist()
+    release(ranks)
     assert out["big"] == 0                      # highest rank -> tier 0
     assert out["big"] < out["small"]
     assert out["unranked"] == 2                 # untouched
@@ -118,6 +116,9 @@ def test_components_transitive_chain_pointer_doubling(spark):
     out = linkgraph.connected_components(e, max_rounds=8).collect()
     assert {r["component"] for r in out} == {100}
     assert len(out) == 40
+    # two rounds cannot settle it: raise, never return over-split labels
+    with pytest.raises(RuntimeError, match="no fixpoint within 2"):
+        linkgraph.connected_components(e, max_rounds=2)
 
 
 def test_components_deterministic_across_partitionings(spark):
@@ -135,18 +136,61 @@ def test_components_deterministic_across_partitionings(spark):
     assert a == b
 
 
-def test_components_releases_intermediate_caches(spark):
-    """Checkpoint blocks live outside the CacheManager (unpersist() is
-    a no-op for them), so each round's frames are dropped explicitly
-    by RDD id — after the call EXACTLY the returned labels frame is
-    newly pinned, deterministically, not eventually-by-GC."""
-    before = linkgraph._pinned_rdd_ids(spark)
-    out = linkgraph.connected_components(
-        _ledges(spark, [(1, 2), (3, 4), (4, 5)])
+def _pinned(spark) -> set[int]:
+    keys = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    return {int(i) for i in keys}
+
+
+def _redirects(spark):
+    from crawler_spark.urls import resolve_redirects
+
+    d = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y"), ("y", "x")], "src string, dst string"
     )
-    out.collect()
-    new_ids = linkgraph._pinned_rdd_ids(spark) - before
-    assert len(new_ids) == 1
+    return resolve_redirects(d, max_doublings=2)
+
+
+def _kmeans(spark):
+    from crawler_spark.similarity import kmeans_lloyd
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 2), float(i)]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    return kmeans_lloyd(emb, centroid_ids=(0, 1), iters=2)
+
+
+FIXPOINT_OPERATORS = {
+    "pagerank": lambda spark: linkgraph.pagerank_fixedpoint(
+        _edges(spark, [("A", "B"), ("B", "A"), ("B", "C")]), iters=2
+    ),
+    "components": lambda spark: linkgraph.connected_components(
+        _ledges(spark, [(1, 2), (3, 4), (4, 5)])
+    ),
+    "kmeans": _kmeans,
+    "redirects": _redirects,
+}
+
+
+@pytest.mark.parametrize("op", sorted(FIXPOINT_OPERATORS))
+def test_fixpoint_operators_release_exactly_their_blocks(spark, op):
+    """Every intermediate state is released inside the call, the result
+    is one checkpoint that release() drops, and a frame another caller
+    checkpointed beforehand stays pinned and readable throughout.
+    (Unreachable frames left by earlier tests may be reclaimed by
+    Spark's ContextCleaner meanwhile, so 'before' bounds the set from
+    above.)"""
+    other = checkpoint(spark.range(7).selectExpr("id * 3 AS x"))
+    other_id = other._jdf.queryExecution().analyzed().rdd().id()
+    before = _pinned(spark)
+    out = FIXPOINT_OPERATORS[op](spark)
+    assert out.count() > 0
+    assert len(_pinned(spark) - before) == 1
+    release(out)
+    after = _pinned(spark)
+    assert after <= before and other_id in after
+    assert sorted(r["x"] for r in other.collect()) == [3 * i for i in range(7)]
+    release(other)
 
 
 def test_anchor_texts_normalize_rank_and_drop(spark):

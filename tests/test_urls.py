@@ -244,6 +244,16 @@ def test_registrable_domain_psl_vectors(spark):
     }
     for h, ps, et in cases:
         assert got[h] == (ps, et), (h, got[h], (ps, et))
+    # a normal rule beside its wildcard ('ck' + '*.ck') compiles to one
+    # key: one output row per host, the wildcard prevails
+    from crawler_spark.urls import PSL_RULES
+
+    pair = spark.createDataFrame([("a.b.ck",), ("b.ck",)], "host string")
+    rows = registrable_domain(pair, rules=PSL_RULES + ["ck"]).collect()
+    assert sorted((r["host"], r["public_suffix"], r["etld1"]) for r in rows) == [
+        ("a.b.ck", "b.ck", "a.b.ck"),
+        ("b.ck", "b.ck", None),
+    ]
 
 
 def test_psl_entries_compile():
