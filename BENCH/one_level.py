@@ -6,8 +6,8 @@ Usage: python BENCH/one_level.py <repo> <cpus> <profile> [fixture_root]
 Runs the same child job as BENCH/run_scaling.py at ONE parallelism
 level on the checkout given by <repo> (so a git worktree of an older
 commit can be timed against HEAD on the same box), printing the
-per-round stats JSON (with phase timings when SPARK_GRAFT_ROUND_TIMING=1
-and the checkout supports it).
+per-round stats JSON (each round's ``phases`` timings included when the
+checkout's ``CrawlRun.round`` reports them).
 """
 
 import json
@@ -48,8 +48,7 @@ def crawl(fixdir):
                    pages_path=f"{fixdir}/pages.parquet",
                    seeds_path=f"{fixdir}/seeds.parquet",
                    robots_path=f"{fixdir}/robots.parquet", as_of=AS_OF,
-                   round_seconds=3600.0, light_stats=True,
-                   store_content=False)
+                   round_seconds=3600.0, store_content=False)
     t0 = time.time()
     stats = run.run(max_rounds=10)
     wall = time.time() - t0

@@ -77,8 +77,7 @@ def crawl(fixdir):
                    pages_path=f"{{fixdir}}/pages.parquet",
                    seeds_path=f"{{fixdir}}/seeds.parquet",
                    robots_path=f"{{fixdir}}/robots.parquet", as_of=AS_OF,
-                   round_seconds=3600.0, light_stats=True,
-                   store_content=False)
+                   round_seconds=3600.0, store_content=False)
     t0 = time.time(); run.run(max_rounds=10); wall = time.time() - t0
     fetched = run.fetch_log.read(spark).count()
     docs = run.documents.read(spark).count()

@@ -125,7 +125,6 @@ def run_crawl(spark, sf_dir: str, profile: str | None = None) -> tuple[float, in
         robots_path=os.path.join(fix, "robots.parquet"),
         as_of=fixtures.AS_OF,
         round_seconds=3600.0,  # politeness budgets sized for one big round
-        light_stats=True,
     )
     t0 = time.time()
     run.run(max_rounds=100)

@@ -2095,7 +2095,6 @@ def q_crawl_mini(spark, sf_dir):
             seeds_path=f"{fix}/seeds.parquet",
             robots_path=f"{fix}/robots.parquet",
             as_of=fixtures.AS_OF,
-            use_bloom=False,
         )
         run.run(max_rounds=12)
         # materialize driver-side (tiny: mini fixture) so the crawl state

@@ -12,10 +12,12 @@ outer dimension (SURVEY.md §7.3.2).
 
 Commit protocol per round: documents / seen / fetch_log / frontier /
 done / metrics commit first, the ``lineage`` row commits LAST and is the
-round's commit point — resume rolls every table back to the snapshot ids
-in the last lineage row, so a crash mid-commit replays the whole round
-idempotently (the reference instead loses its entire run delta on crash,
-``gdprCrawler.py:292-301``).
+round's commit point.  The lineage row names the snapshot id of all six
+tables, and resume rolls each one back to it — a metadata-only
+manifest re-commit (``SnapshotTable.rollback``), no data read or
+written — so a crash at any commit point replays the whole round
+idempotently (the reference instead loses its entire run delta on
+crash, ``gdprCrawler.py:292-301``).
 
 Frontier state is O(round) per round, not O(frontier):
 
@@ -95,8 +97,8 @@ def docs_from_extract_parts(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Documents-schema view of adopted ``sink=doc`` scratch parts.
 
     Must stay value-identical to the projection the plain append path
-    writes (and wrote historically): mixed manifests — plain parts from
-    rollbacks/compactions next to adopted parts — union to one frame."""
+    writes: mixed manifests — plain parts from the post-fetch-keyed
+    documents append next to adopted parts — union to one frame."""
     df = spark.read.schema(SCRATCH_FILE).parquet(*paths)
     return df.select(
         F.col("final_key").alias("doc_hash"),
@@ -126,9 +128,7 @@ class CrawlRun:
         as_of: date,
         run_id: int = 1,
         round_seconds: float = 60.0,
-        use_bloom: bool = True,
         n_shards: int = SN.DEFAULT_SHARDS,
-        light_stats: bool = False,
         store_content: bool = True,
         broadcast_rows_max: int = 2_000_000,
         max_attempts: int = 3,
@@ -145,11 +145,7 @@ class CrawlRun:
         self.as_of = as_of
         self.run_id = run_id
         self.round_seconds = round_seconds
-        self.use_bloom = use_bloom
         self.n_shards = n_shards
-        # light_stats skips the per-round count() actions over the heavy
-        # round output (doc count is recovered from the tiny metrics agg)
-        self.light_stats = light_stats
         # store_content=False stores documents by-reference (text +
         # metadata only; raw bytes stay in the pages table, addressable
         # by url) — the normalized layout at 100 TB, halving write
@@ -226,6 +222,17 @@ class CrawlRun:
         self.fetch_log = t("fetch_log", S.FETCH_LOG)
         self.lineage = t("lineage", S.LINEAGE)
         self.metrics = t("metrics", S.METRICS)
+        # every table a round commits, by its lineage column prefix
+        # (``<prefix>_snapshot``, in S.LINEAGE order): the lineage row
+        # records all of them and resume rolls all of them back
+        self.round_tables = (
+            ("frontier", self.pending),
+            ("done", self.done),
+            ("seen", self.seen),
+            ("documents", self.documents),
+            ("fetch_log", self.fetch_log),
+            ("metrics", self.metrics),
+        )
 
     # -- setup / resume -------------------------------------------------------
 
@@ -271,74 +278,54 @@ class CrawlRun:
         return None if row["r"] is None else int(row["r"])
 
     def resume(self) -> int:
-        """Roll every table back to the last lineage commit point.
+        """Roll every round table back to the last lineage commit point.
 
         Returns the next round id to run.  Any partial commits after the
-        last lineage row are discarded (time-travel via snapshot ids).
-        Leftover scratch from a crashed round is purged here (it is
-        re-derived by replaying the round).  Bloom tables are *not*
-        rolled back: a Bloom that is ahead of its base table only adds
-        false positives, which the exact residue checks absorb.
+        last lineage row are discarded by re-committing each table's
+        manifest at the snapshot id the row records — metadata only, no
+        table data is read or written.  Leftover scratch from a crashed
+        round is purged here (it is re-derived by replaying the round).
+        Bloom tables are *not* rolled back: a Bloom that is ahead of its
+        base table only adds false positives, which the exact residue
+        checks absorb.
         """
         shutil.rmtree(os.path.join(self.state_dir, "scratch"), ignore_errors=True)
         self._offsets_cache = None
         self._bloom_meta = {}
-        last = self.last_committed_round()
-        if last is None:
+        cols = [f"{prefix}_snapshot" for prefix, _ in self.round_tables]
+        last = (
+            self.lineage.read(self.spark)
+            .orderBy(F.desc("round_id"))
+            .select("round_id", *cols)
+            .limit(1)
+            .collect()
+        )
+        if not last:
             self.init()
             return 1
-        lin = (
-            self.lineage.read(self.spark)
-            .filter(F.col("round_id") == last)
-            .select(
-                "frontier_snapshot", "done_snapshot", "seen_snapshot",
-                "documents_snapshot",
+        missing = [c for c in cols if last[0][c] is None]
+        if missing:
+            # a lineage row from an older layout reads absent columns as
+            # null; rolling those tables back to empty would drop data
+            raise ValueError(
+                f"lineage row of round {last[0]['round_id']} has no {missing}: "
+                f"state dir {self.state_dir} predates this layout, regenerate it"
             )
-            .limit(1)
-            .collect()[0]
-        )
-        for table, sid in (
-            (self.pending, lin["frontier_snapshot"]),
-            (self.done, lin["done_snapshot"]),
-            (self.seen, lin["seen_snapshot"]),
-            (self.documents, lin["documents_snapshot"]),
-        ):
-            if not sid:
-                # table had no snapshot at the commit point; discard any
-                # partial commits by resetting to empty
-                if table.current_snapshot_id() is not None:
-                    table.overwrite(
-                        self.spark.createDataFrame([], table.schema),
-                        note="rollback-to-empty",
-                    )
-            elif table.current_snapshot_id() != sid:
-                df = table.read(self.spark, sid)
-                table.overwrite(df, note=f"rollback-to-{sid}")
-        return last + 1
+        for col, (_, table) in zip(cols, self.round_tables):
+            sid = last[0][col] or None  # "" = no snapshot at the commit point
+            if table.current_snapshot_id() != sid:
+                table.rollback(sid, note=f"rollback-to-{sid or 'empty'}")
+        return int(last[0]["round_id"]) + 1
 
-    def _pending_rows_bound(self) -> int | None:
+    def _pending_rows_bound(self) -> int:
         """Upper bound on visible pending rows from the manifest's part
         row statistics — no Spark job.  sum(add-part rows) minus
         sum(tombstone rows); tombstones are always derived from rows
-        read out of pending, so each deletes >= 1 add row.
-
-        Returns None when any ADD part predates the row-stat manifest
-        format (legacy plain-string entries, which _entry_path keeps
-        readable): counting those as 0 would UNDER-count and falsely
-        report a drained frontier, so the caller must fall back to the
-        real limit(1) probe (round-3 ADVICE).  Legacy tombstones are
-        safe to count as 0 — that only over-counts."""
-        from .tables import _entry_rows
-
+        read out of pending, so each deletes >= 1 add row."""
         m = self.pending._manifest()
-        adds = 0
-        for e in m["parts"]:
-            r = _entry_rows(e)
-            if r is None:
-                return None
-            adds += r
-        tombs = sum(_entry_rows(e) or 0 for e in m["delete_parts"])
-        return adds - tombs
+        return sum(e["rows"] for e in m["parts"]) - sum(
+            e["rows"] for e in m["delete_parts"]
+        )
 
     def _has_postfetch(self) -> bool:
         """True iff any seeded authority defers X1 keying to the docpage
@@ -435,22 +422,14 @@ class CrawlRun:
         for pid, n in (delta_by_shard or {}).items():
             offsets[pid] = offsets.get(pid, 0) + n
         self._offsets_cache = dict(offsets)
-        sids = (
-            self.pending.current_snapshot_id() or "",
-            self.done.current_snapshot_id() or "",
-            self.seen.current_snapshot_id() or "",
-            self.documents.current_snapshot_id() or "",
-        )
+        sids = [t.current_snapshot_id() or "" for _, t in self.round_tables]
         rows = [
             (round_id, *sids, pid, off, round_id, fetched, extracted)
             for pid, off in sorted(offsets.items())
         ] or [(round_id, *sids, 0, 0, round_id, fetched, extracted)]
+        # committed_ts (the last LINEAGE field) is stamped by Spark
         df = self._local_df(
-            rows,
-            "round_id long, frontier_snapshot string, done_snapshot string, "
-            "seen_snapshot string, documents_snapshot string, "
-            "partition_id int, frontier_offset long, "
-            "bloom_version long, fetched long, extracted long",
+            rows, T.StructType(S.LINEAGE.fields[:-1])
         ).withColumn("committed_ts", F.current_timestamp())
         self.lineage.append(df, note=f"round-{round_id}")
 
@@ -511,18 +490,16 @@ class CrawlRun:
     def round(self, round_id: int) -> dict | None:
         """Run one micro-batch round; returns stats or None if frontier drained."""
         t0 = time.time()
-        # phase wall-clock breakdown (SPARK_GRAFT_ROUND_TIMING=1): the
-        # per-round fixed cost is the denominator of the whole-crawl
-        # bench at small fixtures, so keep it measurable for free
-        timing = os.environ.get("SPARK_GRAFT_ROUND_TIMING") == "1"
+        # phase wall-clock breakdown: the per-round fixed cost is the
+        # denominator of the whole-crawl bench at small fixtures; one
+        # time.time() call per phase keeps it measurable for free
         phases: dict[str, float] = {}
         _last = [t0]
 
         def tick(name: str) -> None:
-            if timing:
-                now = time.time()
-                phases[name] = round(now - _last[0], 3)
-                _last[0] = now
+            now = time.time()
+            phases[name] = round(now - _last[0], 3)
+            _last[0] = now
 
         spark = self.spark
         pending_df = self.pending.read(spark)
@@ -534,12 +511,11 @@ class CrawlRun:
         # over-counts (a tombstone key shadowing a duplicate-keyed later
         # add) is caught by _force_probe: a round that scheduled nothing
         # makes the next round verify with a real probe.
-        bound = self._pending_rows_bound()
-        if bound is not None and bound <= 0:
+        if self._pending_rows_bound() <= 0:
             return None
-        if bound is None or self._force_probe:
-            # legacy manifest without row stats, or a zero-schedule
-            # round: trust only a real probe before declaring drained
+        if self._force_probe:
+            # after a zero-schedule round, trust only a real probe
+            # before declaring drained
             if pending_df.limit(1).count() == 0:
                 return None
             self._force_probe = False
@@ -691,9 +667,7 @@ class CrawlRun:
         #     (frontier scanned, never shuffled); below it the exact
         #     probe joins run alone (cost-based choice — the Bloom
         #     cogroup stages only pay off once the exact side is big)
-        bloom_active = (
-            self.use_bloom and self._enqueued_total() >= self.bloom_min_rows
-        )
+        bloom_active = self._enqueued_total() >= self.bloom_min_rows
         url_bloom_state = (
             self.url_bloom.read(spark)
             if bloom_active and self.url_bloom.current_snapshot_id() is not None
@@ -912,9 +886,9 @@ class CrawlRun:
         )
 
         # -- stats ------------------------------------------------------------
-        # n_docs comes from the metrics aggregation (collected below —
-        # no separate count job over the heavy round output)
-        n_seen = None if self.light_stats else seen_delta.count()
+        # n_docs comes from the metrics aggregation and the seen-delta
+        # size from the seen part's footer row count (both below — no
+        # separate count job over the heavy round output)
 
         # per-authority metrics = hits aggregation (expanded/doc/bytes
         # from one column-pruned scratch scan) merged with the miss
@@ -1065,11 +1039,10 @@ class CrawlRun:
             "scheduled": n_sched,
             "docs": n_docs,
             "new_frontier_rows": n_new,
-            "seen_delta": n_seen,
+            "seen_delta": self.seen.last_append_rows,
             "wall_s": time.time() - t0,
+            "phases": phases,
         }
-        if timing:
-            st["phases"] = phases
         return st
 
     def _seen_for_p3(self) -> DataFrame:

@@ -123,7 +123,8 @@ FETCH_LOG = T.StructType(
 )
 
 # Checkpoint lineage: one row per (round, partition) — north_rule.
-# frontier_snapshot points at the *pending* MoR table; done_snapshot at
+# One ``<table>_snapshot`` id per table a round commits ("" = none yet);
+# frontier_snapshot points at the *pending* MoR table, done_snapshot at
 # the append-only terminal-row log (together they are "the frontier").
 LINEAGE = T.StructType(
     [
@@ -132,6 +133,8 @@ LINEAGE = T.StructType(
         T.StructField("done_snapshot", T.StringType(), False),
         T.StructField("seen_snapshot", T.StringType(), False),
         T.StructField("documents_snapshot", T.StringType(), False),
+        T.StructField("fetch_log_snapshot", T.StringType(), False),
+        T.StructField("metrics_snapshot", T.StringType(), False),
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("frontier_offset", T.LongType(), False),
         T.StructField("bloom_version", T.LongType(), False),

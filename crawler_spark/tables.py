@@ -9,10 +9,16 @@ that make up the new snapshot, then atomically flips a CURRENT pointer
 of parquet paths and hand them to ``spark.read.parquet`` — so predicate
 pushdown, column pruning and partition-parallel scans all still apply.
 
+Every manifest part entry has one shape, ``{path, seq, rows[, layout]}``:
+the commit sequence number the part was written at, its footer row
+count, and — for adopted parts — the layout tag its reader is keyed by.
+
 On a real cluster, swap ``SnapshotTable`` for ``spark.table(...)`` +
 ``df.writeTo(...).append()`` against an Iceberg catalog — the engine only
-uses the four operations below (read / append / overwrite / time-travel),
-all of which Iceberg provides natively.
+uses the five operations below (read / append / overwrite / time-travel /
+rollback), all of which Iceberg provides natively.  Rollback is
+metadata-only, like Iceberg's ``rollback_to_snapshot``: it re-commits an
+earlier snapshot's manifest and touches no data file.
 
 Reference behavior replaced: the crawler's only "commit" is an
 end-of-run append+flush of visitedDocs.txt (``gdprCrawler.py:292-301``) —
@@ -33,29 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _CURRENT = "CURRENT"
-
-
-def _entry_path(e) -> str:
-    """Manifest part entry -> path (entries are {path, seq, rows} dicts;
-    plain-string entries from pre-sequence-number manifests still read)."""
-    return e["path"] if isinstance(e, dict) else e
-
-
-def _entry_seq(e) -> int:
-    return e.get("seq", 0) if isinstance(e, dict) else 0
-
-
-#: delete parts from pre-sequence-number manifests shadowed every add;
-#: give them +inf seq so that behavior is preserved on old state dirs
-_SEQ_INF = 1 << 60
-
-
-def _entry_seq_del(e) -> int:
-    return e.get("seq", _SEQ_INF) if isinstance(e, dict) else _SEQ_INF
-
-
-def _entry_rows(e) -> int | None:
-    return e.get("rows") if isinstance(e, dict) else None
 
 
 class SnapshotTable:
@@ -91,6 +74,14 @@ class SnapshotTable:
     def _read_manifest(self, snapshot_id: str) -> dict:
         with open(self._manifest_path(snapshot_id)) as f:
             return json.load(f)
+
+    def _manifest(self, snapshot_id: str | None = None) -> dict:
+        """Manifest of ``snapshot_id`` (default: current); an empty one
+        when the table has no snapshot yet."""
+        sid = snapshot_id or self.current_snapshot_id()
+        if sid is None:
+            return {"parts": [], "delete_parts": []}
+        return self._read_manifest(sid)
 
     def snapshots(self) -> list[str]:
         d = os.path.join(self.root, "snapshots")
@@ -152,7 +143,7 @@ class SnapshotTable:
         return entry
 
     def append(self, df: DataFrame, note: str = "append") -> str:
-        parts = list(self._current_parts())
+        parts = list(self._manifest()["parts"])
         parts.append(self._new_entry(self._write_part(df)))
         return self._commit(parts, note)
 
@@ -162,7 +153,7 @@ class SnapshotTable:
         callers that need the delta again (Bloom merge, incremental
         lineage counts) reuse the materialized bytes instead of
         recomputing the delta's whole upstream DAG."""
-        parts = list(self._current_parts())
+        parts = list(self._manifest()["parts"])
         new_part = self._write_part(df)
         parts.append(self._new_entry(new_part))
         sid = self._commit(parts, note)
@@ -195,38 +186,43 @@ class SnapshotTable:
         entry = self._new_entry(part)
         entry["layout"] = layout
         entry.update(meta)
-        parts = list(self._current_parts())
+        parts = list(self._manifest()["parts"])
         parts.append(entry)
         return self._commit(parts, note)
 
+    def rollback(self, snapshot_id: str | None, note: str) -> str:
+        """Make ``snapshot_id`` current again by committing its manifest
+        (``None``: an empty one) as a NEW snapshot — metadata only, no
+        data file is read or written (Iceberg's ``rollback_to_snapshot``).
+        Committing forward instead of moving the pointer back keeps the
+        per-commit sequence number monotone, so parts written after the
+        rollback still order after every part it restores."""
+        m = self._read_manifest(snapshot_id) if snapshot_id else {}
+        return self._commit(
+            m.get("parts", []), note, delete_parts=m.get("delete_parts")
+        )
+
     # -- reads ----------------------------------------------------------------
 
-    def _current_parts(self) -> list:
-        sid = self.current_snapshot_id()
-        return self._read_manifest(sid)["parts"] if sid else []
+    def _paths(self, parts: list) -> list[str]:
+        return [os.path.join(self.root, e["path"]) for e in parts]
 
     def read(self, spark: SparkSession, snapshot_id: str | None = None) -> DataFrame:
         """Read latest snapshot, or time-travel to ``snapshot_id``."""
-        sid = snapshot_id or self.current_snapshot_id()
-        parts = self._read_manifest(sid)["parts"] if sid else []
+        parts = self._manifest(snapshot_id)["parts"]
         if not parts:
             return spark.createDataFrame([], self.schema)
-        plain = [p for p in parts if not (isinstance(p, dict) and p.get("layout"))]
-        adopted = [p for p in parts if isinstance(p, dict) and p.get("layout")]
-        scans = []
-        if plain:
-            paths = [os.path.join(self.root, _entry_path(p)) for p in plain]
-            scans.append(spark.read.schema(self.schema).parquet(*paths))
-        # all adopted parts of one layout read as ONE multi-path scan —
-        # the plan stays O(layouts), not O(rounds)
-        by_layout: dict[str, list] = {}
-        for p in adopted:
-            by_layout.setdefault(p["layout"], []).append(p)
-        for layout, ps in by_layout.items():
-            reader = self.layout_readers[layout]
-            scans.append(
-                reader(spark, [os.path.join(self.root, _entry_path(p)) for p in ps])
-            )
+        # all parts of one layout read as ONE multi-path scan — the plan
+        # stays O(layouts), not O(rounds); plain parts are layout None
+        by_layout: dict[str | None, list] = {}
+        for e in parts:
+            by_layout.setdefault(e.get("layout"), []).append(e)
+        scans = [
+            spark.read.schema(self.schema).parquet(*self._paths(ps))
+            if layout is None
+            else self.layout_readers[layout](spark, self._paths(ps))
+            for layout, ps in by_layout.items()
+        ]
         df = scans[0]
         for s in scans[1:]:
             df = df.unionByName(s)
@@ -285,14 +281,6 @@ class MorTable(SnapshotTable):
         self.compact_rows_frac = compact_rows_frac
         self.compact_min_rows = compact_min_rows
 
-    def _manifest(self, snapshot_id: str | None = None) -> dict:
-        sid = snapshot_id or self.current_snapshot_id()
-        if sid is None:
-            return {"parts": [], "delete_parts": []}
-        m = self._read_manifest(sid)
-        m.setdefault("delete_parts", [])
-        return m
-
     def _add_schema(self) -> T.StructType:
         return T.StructType(
             list(self.schema.fields) + [T.StructField("__seq", T.LongType())]
@@ -303,43 +291,30 @@ class MorTable(SnapshotTable):
             list(self.delete_schema.fields) + [T.StructField("__tseq", T.LongType())]
         )
 
+    def _seq_entry(self, df: DataFrame, seq: int, tomb: bool = False) -> dict:
+        """Write ``df`` as an add (or tombstone) part stamped with commit
+        sequence ``seq`` in its ``__seq`` (``__tseq``) column."""
+        col, sch = ("__tseq", self._del_schema()) if tomb else ("__seq", self._add_schema())
+        return self._new_entry(
+            self._write_part(df.withColumn(col, F.lit(seq).cast("long")), schema=sch)
+        )
+
     def _read_from(
         self, spark: SparkSession, parts: list, delete_parts: list
     ) -> DataFrame:
         if not parts:
             return spark.createDataFrame([], self.schema)
-        # fast path: every part stores its commit sequence number as a
-        # column (written by commit_delta), so the whole table is ONE
-        # multi-path parquet scan instead of an N-part union plan — the
-        # read cost stays O(1) in plan size as parts accumulate between
-        # compactions (the per-round MoR read is on the crawl's fixed-cost
-        # path).  Iceberg equivalent: data-sequence-number file metadata.
-        seqcol = all(isinstance(e, dict) and e.get("seqcol") for e in parts) and all(
-            isinstance(e, dict) and e.get("seqcol") for e in delete_parts
-        )
-        if seqcol:
-            adds = spark.read.schema(self._add_schema()).parquet(
-                *[os.path.join(self.root, _entry_path(e)) for e in parts]
-            )
-        else:
-            adds = None
-            for e in parts:
-                df = spark.read.schema(self.schema).parquet(
-                    os.path.join(self.root, _entry_path(e))
-                ).withColumn("__seq", F.lit(_entry_seq(e)).cast("long"))
-                adds = df if adds is None else adds.unionByName(df)
+        # every part stores its commit sequence number as a column, so
+        # the whole table is ONE multi-path parquet scan instead of an
+        # N-part union plan — the read cost stays O(1) in plan size as
+        # parts accumulate between compactions (the per-round MoR read is
+        # on the crawl's fixed-cost path).  Iceberg equivalent:
+        # data-sequence-number file metadata.
+        adds = spark.read.schema(self._add_schema()).parquet(*self._paths(parts))
         if delete_parts:
-            if seqcol:
-                tomb = spark.read.schema(self._del_schema()).parquet(
-                    *[os.path.join(self.root, _entry_path(e)) for e in delete_parts]
-                )
-            else:
-                tomb = None
-                for e in delete_parts:
-                    t = spark.read.schema(self.delete_schema).parquet(
-                        os.path.join(self.root, _entry_path(e))
-                    ).withColumn("__tseq", F.lit(_entry_seq_del(e)).cast("long"))
-                    tomb = t if tomb is None else tomb.unionByName(t)
+            tomb = spark.read.schema(self._del_schema()).parquet(
+                *self._paths(delete_parts)
+            )
             r, t = adds.alias("r"), tomb.alias("t")
             cond = F.col("t.__tseq") > F.col("r.__seq")
             for k in self.delete_keys:
@@ -350,6 +325,11 @@ class MorTable(SnapshotTable):
     def read(self, spark: SparkSession, snapshot_id: str | None = None) -> DataFrame:
         m = self._manifest(snapshot_id)
         return self._read_from(spark, m["parts"], m["delete_parts"])
+
+    def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
+        """Replace the table with ``df`` as one base part — the
+        compaction writer's shape, so every part keeps ``__seq``."""
+        return self._commit([self._seq_entry(df, len(self.snapshots()))], note)
 
     def commit_delta(
         self,
@@ -364,48 +344,28 @@ class MorTable(SnapshotTable):
         m = self._manifest()
         parts, dels = list(m["parts"]), list(m["delete_parts"])
         seq = len(self.snapshots())  # this commit's sequence number
-        add_path = None
+        add = None
         if adds is not None:
-            add_path = self._write_part(
-                adds.withColumn("__seq", F.lit(seq).cast("long")),
-                schema=self._add_schema(),
-            )
-            e = self._new_entry(add_path)
-            e["seqcol"] = True
-            parts.append(e)
+            add = self._seq_entry(adds, seq)
+            parts.append(add)
         if deletes is not None:
-            e = self._new_entry(
-                self._write_part(
-                    deletes.withColumn("__tseq", F.lit(seq).cast("long")),
-                    schema=self._del_schema(),
-                )
-            )
-            e["seqcol"] = True
-            dels.append(e)
-        base_rows = sum(_entry_rows(e) or 0 for e in parts)
-        tomb_rows = sum(_entry_rows(e) or 0 for e in dels)
+            dels.append(self._seq_entry(deletes, seq, tomb=True))
+        base_rows = sum(e["rows"] for e in parts)
+        tomb_rows = sum(e["rows"] for e in dels)
         row_trigger = (
             tomb_rows >= self.compact_min_rows
             and base_rows > 0
             and tomb_rows >= self.compact_rows_frac * base_rows
         )
         if len(dels) >= self.compact_after or row_trigger:
-            merged = self._read_from(spark, parts, dels)
-            compact_path = self._write_part(
-                merged.withColumn("__seq", F.lit(seq).cast("long")),
-                schema=self._add_schema(),
-            )
-            e = self._new_entry(compact_path)
-            e["seqcol"] = True
-            parts, dels = [e], []
+            parts = [self._seq_entry(self._read_from(spark, parts, dels), seq)]
+            dels = []
             note += "+compact"
         self._commit(parts, note, delete_parts=dels)
-        if add_path is None:
+        if add is None:
             return None
-        return spark.read.schema(self.schema).parquet(
-            os.path.join(self.root, add_path)
-        )
+        return spark.read.schema(self.schema).parquet(*self._paths([add]))
 
     def base_parts(self) -> list[str]:
         """Current data part paths (introspection for O(round) tests)."""
-        return [_entry_path(e) for e in self._manifest()["parts"]]
+        return [e["path"] for e in self._manifest()["parts"]]

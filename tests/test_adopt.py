@@ -8,8 +8,9 @@ The reference writes each document's bytes exactly once too
 adopted rows against the sequential oracle is enforced by the e2e
 suites — this file pins the *mechanics*: layout-tagged manifest
 entries, one multi-path scan per layout, time travel across adopted
-snapshots, and mixed plain+adopted manifests (rollbacks / direct
-appends) reading as one frame.
+snapshots, and mixed plain+adopted manifests (plain parts come only from
+direct appends, such as the post-fetch-keyed documents) reading as one
+frame.
 """
 
 import os
@@ -38,15 +39,13 @@ def test_documents_parts_are_adopted_not_rewritten(spark, tmp_path):
 
     sid = run.documents.current_snapshot_id()
     parts = run.documents._read_manifest(sid)["parts"]
-    adopted = [p for p in parts if isinstance(p, dict) and p.get("layout")]
+    adopted = [p for p in parts if p.get("layout")]
     assert adopted, "doc rounds should commit adopted scratch partitions"
     assert all(p["layout"] == "extract_v1" for p in adopted)
     # manifest row statistics survive adoption (footer counts); the
     # post-fetch-keyed docs (slovenia) are the only plain-part rows
     n = run.documents.read(spark).count()
-    plain_rows = sum(
-        p["rows"] for p in parts if isinstance(p, dict) and not p.get("layout")
-    )
+    plain_rows = sum(p["rows"] for p in parts if not p.get("layout"))
     assert sum(p["rows"] for p in adopted) + plain_rows == n > 0
     assert sum(p["rows"] for p in adopted) > plain_rows
     # adopted files live under the table root (renamed, not referenced
@@ -64,9 +63,7 @@ def test_adopted_reads_one_scan_per_layout(spark, tmp_path):
     run.run(max_rounds=50)
     sid = run.documents.current_snapshot_id()
     n_adopted = sum(
-        1
-        for p in run.documents._read_manifest(sid)["parts"]
-        if isinstance(p, dict) and p.get("layout")
+        1 for p in run.documents._read_manifest(sid)["parts"] if p.get("layout")
     )
     assert n_adopted >= 2  # multi-round crawl -> several adopted parts
     plan = run.documents.read(spark)._jdf.queryExecution().optimizedPlan().toString()
@@ -83,7 +80,7 @@ def test_mixed_plain_and_adopted_manifest(spark, tmp_path):
         for r in docs.select("doc_hash", "url", "batch_id").collect()
     )
     # a plain append (documents schema) lands next to adopted parts —
-    # the shape a rollback-overwrite or external writer produces
+    # the shape the post-fetch-keyed documents append produces
     extra = docs.limit(2).withColumn("doc_hash", F.concat(F.lit("x-"), "doc_hash"))
     run.documents.append(extra, note="plain-next-to-adopted")
     after = run.documents.read(spark)

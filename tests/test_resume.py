@@ -3,15 +3,29 @@ lineage, final state identical to an uninterrupted run (SURVEY.md §5.4).
 
 The reference loses its whole run delta on crash (seen-set flushed only
 at end, gdprCrawler.py:292-301); the engine's per-round lineage commit
-makes any crash replay idempotent.
+makes any crash replay idempotent.  The crash-point cases raise right
+after each commit of round 3 (or just before its lineage row) and
+require all six round tables — row counts included — to come out equal
+to an uninterrupted run, with resume touching manifests only.
 """
 
+import glob
 import os
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from crawler_spark.fixtures import AS_OF, fixture_dir
 from crawler_spark.rounds import CrawlRun
+
+CRASH_ROUND = 3
+ROUND_TABLES = ("pending", "done", "seen", "documents", "fetch_log", "metrics")
+
+
+class Crash(RuntimeError):
+    pass
 
 
 def _mk(spark, state_dir):
@@ -26,25 +40,54 @@ def _mk(spark, state_dir):
     )
 
 
+def _table_rows(table, spark):
+    """A table's rows as a sorted multiset; wall-clock columns dropped."""
+    df = table.read(spark)
+    cols = [
+        f.name
+        for f in df.schema.fields
+        if not isinstance(f.dataType, T.TimestampType) and f.name != "wall_ms"
+    ]
+    return sorted(repr(tuple(r)) for r in df.select(*cols).collect())
+
+
 def _final_state(run):
-    docs = sorted(
-        (r["seq"], r["url"], r["doc_hash"], r["text"])
-        for r in run.documents.read(run.spark)
-        .select("seq", "url", "doc_hash", "text")
-        .collect()
-    )
-    seen = sorted(
-        r["doc_hash"] for r in run.seen.read(run.spark).select("doc_hash").collect()
-    )
-    return docs, seen
+    return {name: _table_rows(getattr(run, name), run.spark) for name in ROUND_TABLES}
 
 
-def test_resume_after_partial_commit(spark, tmp_path):
-    # uninterrupted reference run
-    full = _mk(spark, str(tmp_path / "full"))
+def _run_to_end(run, start):
+    for r in range(start, start + 50):
+        if run.round(r) is None:
+            return
+    raise AssertionError("crawl did not drain in 50 rounds")
+
+
+def _data_dirs(state_dir):
+    return {
+        (name, part)
+        for name in os.listdir(state_dir)
+        if os.path.isdir(os.path.join(state_dir, name, "data"))
+        for part in os.listdir(os.path.join(state_dir, name, "data"))
+    }
+
+
+def _assert_pending_parts_carry_seq(pending):
+    m = pending._manifest()
+    for key, col in (("parts", "__seq"), ("delete_parts", "__tseq")):
+        for e in m[key]:
+            files = glob.glob(os.path.join(pending.root, e["path"], "*.parquet"))
+            assert files, e
+            assert all(col in pq.read_schema(f).names for f in files), e
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    full = _mk(spark, str(tmp_path_factory.mktemp("full")))
     full.run(max_rounds=50)
-    want = _final_state(full)
+    return _final_state(full)
 
+
+def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
     # interrupted run: 2 rounds, then a simulated crash mid-round-3 —
     # documents got appended but lineage (the commit point) did not
     part = _mk(spark, str(tmp_path / "part"))
@@ -72,10 +115,61 @@ def test_resume_after_partial_commit(spark, tmp_path):
         .count()
         == 0
     )
-    for r in range(next_round, next_round + 50):
-        if resumed.round(r) is None:
-            break
-    assert _final_state(resumed) == want
+    _run_to_end(resumed, next_round)
+    assert _final_state(resumed) == uninterrupted
+
+
+@pytest.mark.parametrize(
+    "table,method",
+    [
+        ("pending", "commit_delta"),
+        ("fetch_log", "append"),
+        ("metrics", "append"),
+        ("documents", "adopt_part"),
+        (None, "_commit_lineage"),
+    ],
+    ids=[
+        "after_pending_commit_delta",
+        "after_fetch_log_append",
+        "after_metrics_append",
+        "after_documents_adopt_part",
+        "before_commit_lineage",
+    ],
+)
+def test_crash_point_resumes_to_uninterrupted_state(
+    spark, tmp_path, monkeypatch, uninterrupted, table, method
+):
+    state = str(tmp_path / "crash")
+    run = _mk(spark, state)
+    run.init()
+    for r in range(1, CRASH_ROUND):
+        run.round(r)
+
+    # the commit at the crash point lands (table methods), or the round
+    # dies just before its lineage row — either way lineage is not written
+    target = run if table is None else getattr(run, table)
+    orig = getattr(target, method)
+
+    def crashing(*args, **kwargs):
+        if table is not None:
+            orig(*args, **kwargs)
+        raise Crash(method)
+
+    monkeypatch.setattr(target, method, crashing)
+    with pytest.raises(Crash):
+        run.round(CRASH_ROUND)
+
+    # a fresh CrawlRun on the same state dir: rollback re-commits
+    # manifests only — no table gains a data directory
+    resumed = _mk(spark, state)
+    before = _data_dirs(state)
+    assert resumed.resume() == CRASH_ROUND
+    assert _data_dirs(state) == before
+    _assert_pending_parts_carry_seq(resumed.pending)
+
+    _run_to_end(resumed, CRASH_ROUND)
+    assert _final_state(resumed) == uninterrupted
+    _assert_pending_parts_carry_seq(resumed.pending)
 
 
 def test_time_travel_reads(spark, tmp_path):
@@ -90,32 +184,15 @@ def test_time_travel_reads(spark, tmp_path):
     assert run.documents.read(spark, snap1).count() == n_at_1  # stable
 
 
-def test_legacy_manifest_without_row_stats_still_crawls(spark, tmp_path):
-    """Round-3 ADVICE: a state dir written before the row-stat manifest
-    format has plain-string part entries; the zero-job pending bound
-    must NOT treat those as 0 rows and declare the frontier drained —
-    it returns None and round() falls back to the real limit(1) probe."""
-    import json
-
-    run = _mk(spark, str(tmp_path / "legacy"))
+def test_resume_rejects_lineage_without_table_snapshots(spark, tmp_path):
+    """A lineage row that names fewer tables (an older state layout)
+    must stop resume, not roll the unnamed tables back to empty."""
+    state = str(tmp_path / "old")
+    run = _mk(spark, state)
     run.init()
-    run.round(1)
-
-    # rewrite the pending manifest to the legacy shape: bare path strings
-    t = run.pending
-    sid = t.current_snapshot_id()
-    m = t._manifest()
-    legacy = {
-        "parts": [e["path"] if isinstance(e, dict) else e for e in m["parts"]],
-        "delete_parts": [
-            e["path"] if isinstance(e, dict) else e for e in m["delete_parts"]
-        ],
-    }
-    with open(t._manifest_path(sid), "w") as f:
-        json.dump(legacy, f)
-
-    assert run._pending_rows_bound() is None  # bound unusable, not "drained"
-    before = run.documents.read(spark).count()
-    stats = run.round(2)  # must probe and keep crawling, not return None
-    assert stats is not None
-    assert run.documents.read(spark).count() > before
+    old = run.lineage.read(spark).drop("fetch_log_snapshot", "metrics_snapshot")
+    part = os.path.join("data", "old-layout")
+    old.write.parquet(os.path.join(run.lineage.root, part))
+    run.lineage._commit([{"path": part, "seq": 0, "rows": 1}], "old-layout")
+    with pytest.raises(ValueError, match="predates"):
+        _mk(spark, state).resume()

@@ -181,10 +181,11 @@ def test_quota_gate_enforced_per_round(spark, tmp_path):
 
 def test_bloom_path_equals_exact_path(spark, tmp_path):
     """bloom_min_rows=0 forces the sharded-Bloom membership path; the
-    final crawl state must be identical to the exact probe-join path,
+    final crawl state must be identical to the default run's exact
+    probe-join path (sf0.001 stays far below the default threshold),
     and the Bloom tables must actually exist (consulted, not vestigial)."""
     fix = fixture_dir("sf0.001")
-    a = _mk(spark, tmp_path / "nb", fix, use_bloom=False)
+    a = _mk(spark, tmp_path / "nb", fix)
     a.run(max_rounds=30)
     b = _mk(spark, tmp_path / "wb", fix, bloom_min_rows=0)
     b.run(max_rounds=30)
