@@ -23,12 +23,13 @@ DOM shapes reproduced (citations into /root/reference):
 - ``italy``    — computed pagination ``range(1, n+1)`` from the last page
   number (``pygdpr/models/dpa/italy/__init__.py:28-95``).
 
-File decoding (X3-X6): pdfminer/docx2txt/striprtf are not in this
-sandbox, so each decoder first import-tries the real library and
-otherwise decodes the deterministic FAKE container the fixture generator
-emits (header + UTF-8 payload).  The Spark-side plumbing — binary
-column, Arrow batches, one ``mapInArrow`` pass over html — is real and
-is what the engine tests; the library call is the swappable leaf.
+File decoding (X3-X6): stdlib readers for the real container subset
+the fixtures carry (PDF xref/Flate/text operators, docx zip +
+``word/document.xml``, RTF control words) stand in for the reference's
+pdfminer/docx2txt/striprtf; ``decode_pdf`` still import-tries pdfminer
+first.  The Spark-side plumbing — binary column, Arrow batches, one
+``mapInArrow`` pass over html — is real and is what the engine tests;
+the library call is the swappable leaf.
 """
 
 from __future__ import annotations
@@ -1147,9 +1148,6 @@ def looks_like_html(content: bytes) -> bool:
 
 # -- file decoders (X3-X6) ---------------------------------------------------
 
-FAKE_PDF_HEADER = b"%PDF-FAKE1.4\n%%TEXT\n"
-FAKE_DOCX_HEADER = b"PK-FAKEDOCX\n"
-
 
 def ocr_pdf(content: bytes) -> str:
     """X3 lazy-expensive branch: OCR for scanned pdfs whose text layer is
@@ -1178,8 +1176,7 @@ def decode_pdf(content: bytes) -> str:
     import-try pdfminer first (full fidelity on a real cluster image),
     else the stdlib minimal reader in :mod:`crawler_spark.pdfcodec`
     (xref walk, Flate streams, Tj/TJ/T* text operators — the real-PDF
-    subset the fixtures carry), else the legacy fake container from
-    pre-round-4 state dirs.  The reference strips the extracted text
+    subset the fixtures carry).  The reference strips the extracted text
     (pdf_to_text_service.py:85) and an empty result falls through to
     :func:`ocr_pdf` exactly as its lines 86-88 do."""
     text = None
@@ -1190,9 +1187,7 @@ def decode_pdf(content: bytes) -> str:
     except ImportError:
         pass
     if text is None:
-        if content.startswith(FAKE_PDF_HEADER):
-            text = content[len(FAKE_PDF_HEADER):].decode("utf-8")
-        elif content.startswith(b"%PDF-"):
+        if content.startswith(b"%PDF-"):
             from .pdfcodec import decode_pdf_min
 
             text = decode_pdf_min(content)
@@ -1212,10 +1207,7 @@ def decode_docx(content: bytes) -> str:
     text, so the real decode needs only stdlib zipfile + ElementTree:
     paragraphs (``w:p``) joined with newlines, runs (``w:t``)
     concatenated — the same text docx2txt yields for plain documents.
-    The legacy fake container from older fixtures still decodes.
     """
-    if content.startswith(FAKE_DOCX_HEADER):
-        return content[len(FAKE_DOCX_HEADER):].decode("utf-8")
     import xml.etree.ElementTree as ET
 
     W = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"

@@ -341,10 +341,9 @@ def _make_docx(text: str) -> bytes:
 
 def _make_pdf(payload: str) -> bytes:
     """A REAL minimal PDF carrying ``payload`` — the document format
-    most reference scrapers fetch (textract on .pdf); replaces the
-    pre-round-4 %PDF-FAKE container.  Deterministically rotates (by
-    payload crc) between the classic encoder (xref table, WinAnsi Type1
-    font), the PDF-1.5 encoder (object streams, xref stream, /ToUnicode
+    most reference scrapers fetch (textract on .pdf).  Deterministically
+    rotates (by payload crc) between the classic encoder (xref table,
+    WinAnsi Type1 font), the PDF-1.5 encoder (object streams, xref stream, /ToUnicode
     CMap with a shifted byte encoding), and — in the correctness (sf*)
     profiles, where ``generate(encrypted_pdfs=True)`` arms the full
     rotation — the RC4-encrypted (standard security handler R3, empty

@@ -78,17 +78,6 @@ def robots_flag(frontier: DataFrame, robots: DataFrame) -> DataFrame:
     ).drop("robots_txt")
 
 
-def gate_robots(
-    frontier: DataFrame, robots: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Split pending rows into (allowed, denied) by robots.txt."""
-    flagged = robots_flag(frontier, robots)
-    return (
-        flagged.filter(F.col("__allowed")).drop("__allowed"),
-        flagged.filter(~F.col("__allowed")).drop("__allowed"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # politeness scheduling (R1) inside salted per-host partitions
 # ---------------------------------------------------------------------------
@@ -320,7 +309,6 @@ def admit_candidates(
     seen: DataFrame,
     frontier_depth1: DataFrame,
     run_id: int,
-    bloom_state: DataFrame | None = None,
 ) -> DataFrame:
     """Decide final doc keys for depth-1 candidates of one round.
 
@@ -343,33 +331,17 @@ def admit_candidates(
     passthrough).  Output: admitted rows with final ``doc_hash``.
     """
     # P3 — prior-run final keys, compared against the candidate's RAW
-    # key.  The seen table is the 10^10-row side: candidates that the
-    # sharded Bloom marks definitely-new skip membership checking, and
-    # the residue is verified with a probe-shaped anti-join (seen is
-    # scanned, never shuffled).  Bloom keys are xxhash64(final key) —
-    # a raw-key match implies final==raw, so probing xxhash64(raw_hash)
-    # is a superset test (no false negatives); keys from the *current*
-    # run in the Bloom only create residue rows, which the exact
-    # run_id-filtered anti-join then correctly keeps.
+    # md5 key.  The seen table is the 10^10-row side, so the exact check
+    # is a probe-shaped anti-join (seen is scanned, never shuffled).  In
+    # a single-run crawl the prior-run set is empty; in a re-crawl every
+    # re-listed old document IS a member, so a Bloom pre-filter would
+    # send it to this same probe anyway.
     from . import seen as SN
 
     prior = seen.filter(F.col("run_id") < run_id).select(
         F.col("doc_hash").alias("raw_hash")
     )
-    if bloom_state is not None:
-        flagged = SN.bloom_flag(
-            candidates.withColumn("__h", F.xxhash64(F.col("raw_hash"))),
-            bloom_state,
-            hash_col="__h",
-        ).drop("__h")
-        fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        suspected = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        # exact residue check on the md5 string itself (not the 64-bit
-        # probe hash) — a hash collision can only cost a residue check,
-        # never a false drop
-        cand = fresh.unionByName(SN.anti_join_probe(suspected, prior, "raw_hash"))
-    else:
-        cand = SN.anti_join_probe(candidates, prior, "raw_hash")
+    cand = SN.anti_join_probe(candidates, prior, "raw_hash")
 
     # first-date registry from earlier rounds of this run — probe-shaped:
     # the big depth-1 set is first semi-filtered (broadcast) down to the
@@ -380,7 +352,7 @@ def admit_candidates(
         frontier_depth1.filter(F.col("raw_hash").isNotNull())
         .join(
             # pre-P3 candidate set: a superset probe is harmless (left
-            # join below) and avoids recomputing the bloom-flag stage
+            # join below) and avoids recomputing the P3 probe
             F.broadcast(candidates.select("raw_hash").distinct()),
             "raw_hash",
             "left_semi",
@@ -447,7 +419,7 @@ def seed_frontier(seeds: DataFrame) -> DataFrame:
     # seq = seq_seed(seed_idx, page=1): shifts match extract.py bit layout
     return seeds.select(
         F.col("url"),
-        urls.url_hash(urls.canonicalize_simple(F.col("url"))).alias("url_hash"),
+        urls.url_hash(F.col("url")).alias("url_hash"),
         "authority",
         "doc_type",
         F.lit(0).alias("depth"),

@@ -36,9 +36,10 @@ Frontier state is O(round) per round, not O(frontier):
   round-sized aggregation), replacing the full frontier
   groupBy(shard).count() per round.
 - membership checks against the big tables (P5 page-revisit, P3 seen,
-  P4 final keys) go through the sharded Blooms + probe-shaped
-  anti-joins (seen.anti_join_probe): the big side is scanned —
-  bucket-pruned under Iceberg — but never shuffled.
+  P4 final keys) are probe-shaped anti-joins (seen.anti_join_probe):
+  the big side is scanned — bucket-pruned under Iceberg — but never
+  shuffled.  P5 additionally goes through the sharded URL Bloom once
+  the frontier is big enough to pay for it.
 
 Retry semantics (R4, ``pygdpr/models/dpa/__init__.py:450-452``
 ``MaxRetriesError``): a missed URL re-enters pending with
@@ -128,14 +129,12 @@ class CrawlRun:
         as_of: date,
         run_id: int = 1,
         round_seconds: float = 60.0,
-        n_shards: int = SN.DEFAULT_SHARDS,
         store_content: bool = True,
         broadcast_rows_max: int = 2_000_000,
         max_attempts: int = 3,
         bloom_min_rows: int = 1_000_000,
         preprune_margin: int = 4,
         quota_budgets: dict[str, int] | None = None,
-        quota_key: str = "authority",
     ):
         self.spark = spark
         self.state_dir = state_dir
@@ -145,7 +144,6 @@ class CrawlRun:
         self.as_of = as_of
         self.run_id = run_id
         self.round_seconds = round_seconds
-        self.n_shards = n_shards
         # store_content=False stores documents by-reference (text +
         # metadata only; raw bytes stay in the pages table, addressable
         # by url) — the normalized layout at 100 TB, halving write
@@ -170,17 +168,16 @@ class CrawlRun:
         # salt per partition, never the whole pending set)
         self.preprune_margin = preprune_margin
         # R3 second-resource quota (translate_quota_service.py:8-29
-        # pattern): {key -> max fetches per round}; rows past the quota
+        # pattern): {authority -> max fetches per round}; rows past the quota
         # are deferred — they stay pending for the next round, the
         # declarative analog of the reference's 105 s back-off sleep
         # (pygdpr/models/dpa/__init__.py:656-659)
         self.quota_budgets = quota_budgets
-        self.quota_key = quota_key
         # cost-based Bloom activation (same idea as AQE's broadcast
         # threshold): below this many enqueued URLs the exact probe-shaped
         # anti-joins are strictly cheaper than Bloom cogroup stages, so
-        # the Bloom tables are neither built nor consulted; the first
-        # round past the threshold builds them from the full tables
+        # the URL Bloom is neither built nor consulted; the first
+        # round past the threshold builds it from the full frontier
         # (one-time O(table), amortized O(round)).  Set 0 to force the
         # Bloom path (tests do).
         self.bloom_min_rows = bloom_min_rows
@@ -199,8 +196,8 @@ class CrawlRun:
         self._force_probe = False
         # lazily computed: does any seeded authority use post-fetch keys?
         self._postfetch: bool | None = None
-        # per-bloom-table (m_bits, conservative max items/shard) carry
-        self._bloom_meta: dict[str, tuple[int, int]] = {}
+        # URL Bloom (m_bits, conservative max items/shard) carry
+        self._bloom_meta: tuple[int, int] | None = None
 
         t = lambda name, sch: SnapshotTable(os.path.join(state_dir, name), sch)
         # the pending set keeps the historical "frontier" directory/column
@@ -212,11 +209,10 @@ class CrawlRun:
         )
         self.done = t("done", S.FRONTIER)
         self.seen = t("seen", S.SEEN)
-        self.bloom = t("seen_bloom", S.SEEN_BLOOM)
-        # second sharded Bloom over *frontier url_hashes* (the north-star
+        # sharded Bloom over *frontier url_hashes* (the north-star
         # "URL-seen filter"): P5 page-revisit dedupe consults it so the
         # common case (brand-new child URL) never joins the big frontier
-        self.url_bloom = t("url_bloom", S.SEEN_BLOOM)
+        self.url_bloom = t("url_bloom", S.BLOOM)
         self.documents = t("documents", S.DOCUMENTS)
         self.documents.layout_readers["extract_v1"] = docs_from_extract_parts
         self.fetch_log = t("fetch_log", S.FETCH_LOG)
@@ -259,9 +255,9 @@ class CrawlRun:
         )
 
     def init(self) -> None:
-        """Seed the frontier (round 0 commit point).  Bloom tables are
+        """Seed the frontier (round 0 commit point).  The URL Bloom is
         created lazily by the first round whose frontier size crosses
-        ``bloom_min_rows`` (built from the full tables at that point)."""
+        ``bloom_min_rows`` (built from the full frontier at that point)."""
         if self.pending.current_snapshot_id() is not None:
             return
         seeded = self.pending.commit_delta(
@@ -285,13 +281,13 @@ class CrawlRun:
         manifest at the snapshot id the row records — metadata only, no
         table data is read or written.  Leftover scratch from a crashed
         round is purged here (it is re-derived by replaying the round).
-        Bloom tables are *not* rolled back: a Bloom that is ahead of its
+        The URL Bloom is *not* rolled back: a Bloom that is ahead of its
         base table only adds false positives, which the exact residue
-        checks absorb.
+        check absorbs.
         """
         shutil.rmtree(os.path.join(self.state_dir, "scratch"), ignore_errors=True)
         self._offsets_cache = None
-        self._bloom_meta = {}
+        self._bloom_meta = None
         cols = [f"{prefix}_snapshot" for prefix, _ in self.round_tables]
         last = (
             self.lineage.read(self.spark)
@@ -375,7 +371,7 @@ class CrawlRun:
         return {
             int(r["pid"]): int(r["n"])
             for r in df.groupBy(
-                SN.shard_of(F.col("url_hash"), self.n_shards).alias("pid")
+                SN.shard_of(F.col("url_hash")).alias("pid")
             )
             .agg(F.count("*").alias("n"))
             .collect()
@@ -424,9 +420,9 @@ class CrawlRun:
         self._offsets_cache = dict(offsets)
         sids = [t.current_snapshot_id() or "" for _, t in self.round_tables]
         rows = [
-            (round_id, *sids, pid, off, round_id, fetched, extracted)
+            (round_id, *sids, pid, off, fetched, extracted)
             for pid, off in sorted(offsets.items())
-        ] or [(round_id, *sids, 0, 0, round_id, fetched, extracted)]
+        ] or [(round_id, *sids, 0, 0, fetched, extracted)]
         # committed_ts (the last LINEAGE field) is stamped by Spark
         df = self._local_df(
             rows, T.StructType(S.LINEAGE.fields[:-1])
@@ -435,13 +431,12 @@ class CrawlRun:
 
     def _bloom_commit(
         self,
-        table: SnapshotTable,
         delta: DataFrame,
         full: DataFrame,
         note: str,
         est_new_per_shard: int = 0,
     ) -> None:
-        """Merge ``delta`` url_hashes into a sharded Bloom table, growing
+        """Merge ``delta`` url_hashes into the sharded URL Bloom, growing
         it geometrically when any shard nears capacity (ROADMAP #7: a
         fixed 1<<20 bitset caps out at ~10^6 hashes/shard).
 
@@ -450,15 +445,15 @@ class CrawlRun:
         stats read per run — the steady-state round pays zero extra
         jobs.  ``est_new_per_shard`` conservatively over-counts this
         delta (early resize is harmless; a LATE resize only raises FP
-        rate, never correctness — the exact residue joins stay
+        rate, never correctness — the exact residue join stays
         authoritative).  First activation (lazy threshold crossing) and
         resizes rebuild from ``full`` (all hashes) — an O(table) job
         that happens O(log n) times total, so amortized per-round cost
         stays O(round).
         """
-        meta = self._bloom_meta.get(table.root)
+        table = self.url_bloom
         prior = table.read(self.spark) if table.current_snapshot_id() else None
-        if meta is None:
+        if self._bloom_meta is None:
             cur_m, max_n = SN.DEFAULT_M_BITS, 0
             if prior is not None:
                 stats = prior.select(
@@ -468,22 +463,18 @@ class CrawlRun:
                     cur_m = max(int(r["m"]) for r in stats)
                     max_n = max(int(r["n_items"]) for r in stats)
         else:
-            cur_m, max_n = meta
+            cur_m, max_n = self._bloom_meta
         max_n += est_new_per_shard
         target = SN.bloom_target_bits(max_n)
         if prior is None or target > cur_m:
             # first activation or resize: rebuild from the FULL hash set
             # so the filter is a superset of its base table from day one
             cur_m = max(cur_m, target)
-            state = SN.bloom_build(
-                self.spark, full, None, n_shards=self.n_shards, m_bits=cur_m
-            )
+            state = SN.bloom_build(self.spark, full, None, m_bits=cur_m)
         else:
-            state = SN.bloom_build(
-                self.spark, delta, prior, n_shards=self.n_shards, m_bits=cur_m
-            )
+            state = SN.bloom_build(self.spark, delta, prior, m_bits=cur_m)
         table.overwrite(state, note=note)
-        self._bloom_meta[table.root] = (cur_m, max_n)
+        self._bloom_meta = (cur_m, max_n)
 
     # -- one round ------------------------------------------------------------
 
@@ -564,13 +555,10 @@ class CrawlRun:
             # rows are simply NOT scheduled (no tombstone), so they
             # remain in pending and re-enter scheduling next round
             bud = spark.createDataFrame(
-                list(self.quota_budgets.items()),
-                f"{self.quota_key} string, budget long",
+                list(self.quota_budgets.items()), "authority string, budget long"
             )
             sched_all, _deferred = FR.quota_gate(
-                sched_all.withColumn("cost", F.lit(1).cast("long")),
-                bud,
-                key_col=self.quota_key,
+                sched_all.withColumn("cost", F.lit(1).cast("long")), bud
             )
             sched_all = sched_all.drop("cost")
         scheduled = sched_all.persist(
@@ -668,14 +656,9 @@ class CrawlRun:
         #     probe joins run alone (cost-based choice — the Bloom
         #     cogroup stages only pay off once the exact side is big)
         bloom_active = self._enqueued_total() >= self.bloom_min_rows
-        url_bloom_state = (
+        url_bits = (
             self.url_bloom.read(spark)
             if bloom_active and self.url_bloom.current_snapshot_id() is not None
-            else None
-        )
-        seen_bloom_state = (
-            self.bloom.read(spark)
-            if bloom_active and self.bloom.current_snapshot_id() is not None
             else None
         )
         # "all enqueued" membership sources reuse the persisted pending
@@ -714,7 +697,7 @@ class CrawlRun:
         url_children = SN.dedupe_against_seen(
             url_kids.dropDuplicates(["url_hash"]),
             enqueued_urls,
-            url_bloom_state,
+            url_bits,
         )
 
         # 4b. expansion: depth-1 document candidates — X1 key + P3/P4
@@ -725,11 +708,7 @@ class CrawlRun:
         )
         cand = self._to_frontier_rows(cand, keep_keys=True)
         admitted = FR.admit_candidates(
-            cand,
-            self._seen_for_p3(),
-            depth1_enqueued,
-            self.run_id,
-            bloom_state=seen_bloom_state,
+            cand, self.seen.read(spark), depth1_enqueued, self.run_id
         )
 
         new_rows = url_children.unionByName(admitted)
@@ -802,20 +781,13 @@ class CrawlRun:
             seen_delta = seen_delta.unionByName(
                 post.select("doc_hash", "raw_hash", "release_date", "seq")
             )
-        seen_delta = (
-            seen_delta.distinct()
-            .select(
-                F.xxhash64(F.col("doc_hash")).alias("url_hash"),
-                "doc_hash",
-                "raw_hash",
-                "release_date",
-                "seq",
-                F.lit(self.run_id).cast("long").alias("run_id"),
-                F.current_timestamp().alias("first_seen_ts"),
-                SN.shard_of(F.xxhash64(F.col("doc_hash")), self.n_shards).alias(
-                    "shard"
-                ),
-            )
+        seen_delta = seen_delta.distinct().select(
+            "doc_hash",
+            "raw_hash",
+            "release_date",
+            "seq",
+            F.lit(self.run_id).cast("long").alias("run_id"),
+            F.current_timestamp().alias("first_seen_ts"),
         )
 
         # 7. state transitions: every scheduled row leaves the pending
@@ -830,9 +802,7 @@ class CrawlRun:
         attempt_status = (
             out_hits.filter(F.col("out_kind") != "child")
             .select(
-                F.xxhash64(urls.canonicalize_simple(F.col("url"))).alias(
-                    "url_hash"
-                ),
+                urls.url_hash(F.col("url")).alias("url_hash"),
                 "status",
                 F.col("text_len").alias("bytes"),
             )
@@ -965,9 +935,7 @@ class CrawlRun:
                     if post_doc_rows is not None
                     else None
                 )
-                f_seen = ex.submit(
-                    self.seen.append_read, spark, seen_delta, note
-                )
+                f_seen = ex.submit(self.seen.append, seen_delta, note)
                 f_log = ex.submit(self.fetch_log.append, log_rows, note)
                 f_pend = ex.submit(
                     self.pending.commit_delta, spark, adds, tombstones, note
@@ -988,7 +956,7 @@ class CrawlRun:
                 )
                 if f_docs is not None:
                     f_docs.result()
-                _, seen_read = f_seen.result()
+                f_seen.result()
                 f_log.result()
                 f_done.result()
                 delta_by_shard = f_shards.result()
@@ -1007,15 +975,6 @@ class CrawlRun:
             tick("commits")
             if bloom_active:
                 self._bloom_commit(
-                    self.bloom,
-                    delta=seen_read.select("url_hash"),
-                    full=self.seen.read(spark).select("url_hash"),
-                    note=note,
-                    # n_docs >= distinct new seen keys; 2x for shard skew
-                    est_new_per_shard=(2 * n_docs) // self.n_shards + 1,
-                )
-                self._bloom_commit(
-                    self.url_bloom,
                     delta=add_read.select("url_hash"),
                     full=self.frontier_view().select("url_hash"),
                     note=note,
@@ -1045,14 +1004,10 @@ class CrawlRun:
         }
         return st
 
-    def _seen_for_p3(self) -> DataFrame:
-        return self.seen.read(self.spark)
-
     def _to_frontier_rows(self, df: DataFrame, keep_keys: bool = False) -> DataFrame:
-        canon = urls.canonicalize_simple(F.col("url"))
         return df.select(
             F.col("url"),
-            F.xxhash64(canon).alias("url_hash"),
+            urls.url_hash(F.col("url")).alias("url_hash"),
             "authority",
             "doc_type",
             "depth",

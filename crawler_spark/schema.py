@@ -71,19 +71,18 @@ FRONTIER = T.StructType(
 # gdprCrawler.py:103-121 read / 292-301 append).
 SEEN = T.StructType(
     [
-        T.StructField("url_hash", T.LongType(), False),  # xxhash64(doc_hash)
         T.StructField("doc_hash", T.StringType(), False),  # final key
         T.StructField("raw_hash", T.StringType(), False),  # md5(title), pre-suffix
         T.StructField("release_date", T.DateType(), True),
         T.StructField("seq", T.LongType(), False),
         T.StructField("run_id", T.LongType(), False),  # P3 = rows with run_id < cur
         T.StructField("first_seen_ts", T.TimestampType(), True),
-        T.StructField("shard", T.IntegerType(), False),
     ]
 )
 
-# Sharded Bloom pre-filter state (binary bitsets, one row per shard).
-SEEN_BLOOM = T.StructType(
+# Sharded Bloom pre-filter state over frontier url_hashes (binary
+# bitsets, one row per shard).
+BLOOM = T.StructType(
     [
         T.StructField("shard", T.IntegerType(), False),
         T.StructField("bits", T.BinaryType(), False),
@@ -137,7 +136,6 @@ LINEAGE = T.StructType(
         T.StructField("metrics_snapshot", T.StringType(), False),
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("frontier_offset", T.LongType(), False),
-        T.StructField("bloom_version", T.LongType(), False),
         T.StructField("fetched", T.LongType(), False),
         T.StructField("extracted", T.LongType(), False),
         T.StructField("committed_ts", T.TimestampType(), False),

@@ -1,4 +1,5 @@
-"""URL-seen set: sharded Bloom pre-filter + authoritative exact anti-join.
+"""URL-seen filter: one sharded Bloom over frontier URL hashes +
+authoritative exact anti-joins.
 
 Reference behavior re-expressed (SURVEY.md §2.1 S2/S6, §2.3 P3/P4):
 ``visitedDocs.txt`` is read fully into a Python list at startup
@@ -6,16 +7,19 @@ Reference behavior re-expressed (SURVEY.md §2.1 S2/S6, §2.3 P3/P4):
 — an O(n) list scan per candidate (!) — with the delta appended+flushed
 only at end of run (``gdprCrawler.py:292-301``).
 
-At 10^10 URLs the seen set cannot live on one node.  Design:
+At 10^10 URLs the seen sets cannot live on one node.  Design:
 
-- authoritative membership = **left-anti join** ``candidates ⟕̸ seen ON
-  url_hash`` (hash-partitioned both sides; Catalyst/AQE pick the
-  physical join).
-- a **sharded Bloom filter** (one bitset row per ``pmod(url_hash,
-  n_shards)`` shard, binary column) prunes the candidate side first:
-  rows the Bloom says are definitely-new skip the anti-join shuffle
-  entirely; only the (true-dup + false-positive) residue — a tiny
-  fraction under a sane m/n — is shuffled against the seen table.
+- authoritative membership = **probe-shaped left-anti join**
+  (:func:`anti_join_probe`): the big side is scanned, never shuffled.
+  The document-key check (P3, prior-run ``seen`` keys) is this exact
+  join alone — in a single-run crawl its prior-run side is empty, and
+  in a re-crawl every re-listed document is a true member, so a Bloom
+  in front of it would filter nothing.
+- the frontier URL check (P5) puts a **sharded Bloom filter** (one
+  bitset row per ``pmod(url_hash, SHARDS)`` shard, binary column) in
+  front: rows the Bloom says are definitely-new skip membership checking
+  entirely; only the (true-dup + false-positive) residue is probed
+  against pending ∪ done.
 - Bloom state is built/merged per shard with **cogrouped
   applyInPandas** (numpy-vectorized bit ops; no per-row Python), stored
   as rows so it snapshots/travels with the same table discipline as
@@ -40,9 +44,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import SEEN_BLOOM
+from .schema import BLOOM
 
-DEFAULT_SHARDS = 32
+SHARDS = 32
 DEFAULT_K = 7
 DEFAULT_M_BITS = 1 << 20
 # auto-sizing: with k=7 double-hashed probes, m/n ≈ 14 bits/item keeps the
@@ -108,21 +112,20 @@ def _test_bits(bits: np.ndarray, idx: np.ndarray) -> np.ndarray:
     return probes.all(axis=1)
 
 
-def shard_of(hash_col, n_shards: int = DEFAULT_SHARDS):
-    return F.pmod(hash_col, F.lit(n_shards)).cast("int")
+def shard_of(hash_col):
+    return F.pmod(hash_col, F.lit(SHARDS)).cast("int")
 
 
 def bloom_build(
     spark: SparkSession,
     new_hashes: DataFrame,
     prior_state: DataFrame | None = None,
-    n_shards: int = DEFAULT_SHARDS,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
 ) -> DataFrame:
     """Merge new url_hashes into per-shard Bloom bitsets.
 
-    ``new_hashes`` needs a ``url_hash`` column; returns SEEN_BLOOM rows.
+    ``new_hashes`` needs a ``url_hash`` column; returns BLOOM rows.
     Incremental: prior shard bitsets are OR-merged with the new hashes'
     bits inside one cogrouped applyInPandas (one pass, no collect).
     ``m_bits`` only sizes *fresh* shards; existing shards keep their own
@@ -130,10 +133,10 @@ def bloom_build(
     filter by rebuilding from the full hash set with a larger m_bits.
     """
     if prior_state is None:
-        prior_state = spark.createDataFrame([], SEEN_BLOOM)
+        prior_state = spark.createDataFrame([], BLOOM)
 
     hashed = new_hashes.select(
-        shard_of(F.col("url_hash"), n_shards).alias("shard"),
+        shard_of(F.col("url_hash")).alias("shard"),
         F.col("url_hash"),
     )
 
@@ -158,7 +161,7 @@ def bloom_build(
     return (
         hashed.groupBy("shard")
         .cogroup(prior_state.groupBy("shard"))
-        .applyInPandas(merge, schema=SEEN_BLOOM)
+        .applyInPandas(merge, schema=BLOOM)
     )
 
 
@@ -166,7 +169,6 @@ def bloom_flag(
     candidates: DataFrame,
     state: DataFrame,
     hash_col: str = "url_hash",
-    n_shards: int = DEFAULT_SHARDS,
     k: int = DEFAULT_K,
 ) -> DataFrame:
     """Add ``maybe_seen boolean`` to candidates via the sharded Bloom.
@@ -183,7 +185,7 @@ def bloom_flag(
         list(candidates.schema.fields)
         + [T.StructField("maybe_seen", T.BooleanType(), False)]
     )
-    cand = candidates.withColumn("__shard", shard_of(F.col(hash_col), n_shards))
+    cand = candidates.withColumn("__shard", shard_of(F.col(hash_col)))
 
     def flag(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
         out = cand_pdf[cols].copy()
@@ -208,22 +210,21 @@ def bloom_flag(
 def dedupe_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom_state: DataFrame | None = None,
+    bloom: DataFrame | None = None,
     hash_col: str = "url_hash",
-    **bloom_kw,
 ) -> DataFrame:
     """Rows of ``candidates`` whose ``url_hash`` is not in ``seen``.
 
-    With Bloom state: definitely-new rows bypass membership checking
+    With ``bloom`` state: definitely-new rows bypass membership checking
     entirely; only the (true-dup + false-positive) residue is verified
     exactly — via :func:`anti_join_probe`, so the big ``seen`` side is
     scanned, never shuffled.  Without Bloom: the probe-shaped anti-join
     alone (still the authoritative path — Bloom is an optimization,
     never the truth).
     """
-    if bloom_state is None:
+    if bloom is None:
         return anti_join_probe(candidates, seen, hash_col)
-    flagged = bloom_flag(candidates, bloom_state, hash_col=hash_col, **bloom_kw)
+    flagged = bloom_flag(candidates, bloom, hash_col=hash_col)
     fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspected = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     survived = anti_join_probe(suspected, seen, hash_col)

@@ -150,9 +150,8 @@ class SnapshotTable:
     def append_read(self, spark: SparkSession, df: DataFrame, note: str = "append"):
         """Append ``df`` and return (snapshot_id, re-read of the part just
         written).  The re-read is a plain parquet scan of the delta —
-        callers that need the delta again (Bloom merge, incremental
-        lineage counts) reuse the materialized bytes instead of
-        recomputing the delta's whole upstream DAG."""
+        a caller that needs the delta again reuses the materialized
+        bytes instead of recomputing the delta's whole upstream DAG."""
         parts = list(self._manifest()["parts"])
         new_part = self._write_part(df)
         parts.append(self._new_entry(new_part))
@@ -164,7 +163,7 @@ class SnapshotTable:
     def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
         return self._commit([self._new_entry(self._write_part(df))], note)
 
-    def adopt_part(self, src_dir: str, note: str, layout: str, **meta) -> str:
+    def adopt_part(self, src_dir: str, note: str, layout: str) -> str:
         """Commit an already-materialized parquet directory as a new part
         by RENAME — zero data movement (Iceberg's ``add_files`` shape).
 
@@ -185,7 +184,6 @@ class SnapshotTable:
             shutil.move(src_dir, dst)
         entry = self._new_entry(part)
         entry["layout"] = layout
-        entry.update(meta)
         parts = list(self._manifest()["parts"])
         parts.append(entry)
         return self._commit(parts, note)

@@ -6,25 +6,23 @@ Reference behavior re-expressed:
   (``pygdpr/models/dpa/edpb/__init__.py:254-257,336-339``;
   ``pygdpr/models/dpa/austria/__init__.py:104-111``) — generalized into a
   real canonicalizer (scheme/host lowercase, resolve relative, strip
-  fragments, drop default ports, normalize dot-segments) implemented as an
-  Arrow-vectorized ``pandas_udf`` (no per-row Python UDFs).
+  fragments, drop default ports, normalize dot-segments) that runs inside
+  the Arrow-vectorized extract stage (no per-row Python UDFs).
 - identity key = md5 hexdigest of the document *title*
   (``pygdpr/models/dpa/austria/__init__.py:99`` and all 29 scrapers) —
   Spark's built-in ``md5(encode(title,'UTF-8'))`` is byte-identical to
   ``hashlib.md5`` for UTF-8 input (pytest-verified in tests/test_urls.py).
-- ``url_hash`` — 64-bit ``xxhash64`` of the canonical URL (the frontier
-  key at 10^10-URL scale; 32-bit murmur3 would collide ~1% at 10^10).
+- ``url_hash`` — 64-bit ``xxhash64`` of the SQL-canonical URL (the
+  frontier key at 10^10-URL scale; 32-bit murmur3 would collide ~1% at
+  10^10).
 """
 
 from __future__ import annotations
 
 from urllib.parse import urljoin, urlsplit, urlunsplit
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from .fixpoint import checkpoint, fixpoint, release
 
@@ -58,19 +56,12 @@ def canonicalize_one(href: str, base: str | None = None) -> str | None:
     return urlunsplit((scheme, netloc, path, s.query, ""))  # fragment dropped
 
 
-@pandas_udf(StringType())
-def canonicalize_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    """Arrow-vectorized canonicalizer: resolve ``href`` against ``base``."""
-    return pd.Series(
-        [canonicalize_one(h, b) for h, b in zip(href, base)], dtype="object"
-    )
-
-
 def canonicalize_simple(url: Column) -> Column:
     """SQL-expressible canonical subset (lowercase scheme+host, strip
-    fragment, drop default port) — used by oracle-checked queries so the
-    DuckDB oracle can reproduce it exactly; the full canonicalizer above
-    covers relative resolution + dot-segments inside the engine."""
+    fragment, drop default port) — the input of :func:`url_hash`.  Links
+    reach it already absolute: the engine resolves them (relative
+    resolution + dot-segments) with :func:`canonicalize_one` inside the
+    extract UDF."""
     c = F.regexp_replace(url, r"#.*$", "")  # strip fragment
     # lowercase scheme://host prefix, keep path/query case
     c = F.concat(
@@ -88,8 +79,8 @@ def host_of(url: Column) -> Column:
 
 
 def url_hash(url: Column) -> Column:
-    """64-bit frontier key of the canonical URL."""
-    return F.xxhash64(url)
+    """64-bit frontier key: ``xxhash64`` of the SQL-canonical URL."""
+    return F.xxhash64(canonicalize_simple(url))
 
 
 def surt_key(url: Column) -> Column:

@@ -9,21 +9,6 @@ import pytest
 from crawler_spark import extract as X
 
 
-def test_pdf_decode_plain():
-    assert X.decode_pdf(X.FAKE_PDF_HEADER + b"hello world") == "hello world"
-
-
-def test_pdf_empty_text_layer_falls_through_to_ocr():
-    # scanned pdf: text extraction yields only whitespace -> the OCR
-    # branch is entered (and raises its sandbox stub error)
-    with pytest.raises(NotImplementedError, match="OCR fallback"):
-        X.decode_pdf(X.FAKE_PDF_HEADER + b"   \n\t ")
-
-
-def test_docx_decode_fake_container():
-    assert X.decode_docx(X.FAKE_DOCX_HEADER + b"notice text") == "notice text"
-
-
 def test_docx_decode_real_zip():
     from crawler_spark.fixtures import _make_docx
 
@@ -60,12 +45,7 @@ def test_rtf_decode_real_document():
     assert X.decode_rtf(rtf) == "Décision de la CNIL\nUne amende de 50{00} EUR."
 
 
-# -- X3 real minimal PDF codec (round-4: replaces the %PDF-FAKE default) ----
-
-
-def test_pdf_legacy_fake_container_still_decodes():
-    # pre-round-4 state dirs carry the fake container; keep it readable
-    assert X.decode_pdf(X.FAKE_PDF_HEADER + b"hello world") == "hello world"
+# -- X3 real minimal PDF codec ----------------------------------------------
 
 
 def test_pdf_real_roundtrip_single_page():

@@ -6,7 +6,9 @@ at end, gdprCrawler.py:292-301); the engine's per-round lineage commit
 makes any crash replay idempotent.  The crash-point cases raise right
 after each commit of round 3 (or just before its lineage row) and
 require all six round tables — row counts included — to come out equal
-to an uninterrupted run, with resume touching manifests only.
+to an uninterrupted run, with resume touching manifests only.  The URL
+Bloom is not rolled back: the case that crashes after its overwrite
+checks that a Bloom ahead of its base table only adds false positives.
 """
 
 import glob
@@ -28,7 +30,7 @@ class Crash(RuntimeError):
     pass
 
 
-def _mk(spark, state_dir):
+def _mk(spark, state_dir, **kw):
     fix = fixture_dir("sf0.001")
     return CrawlRun(
         spark,
@@ -37,6 +39,7 @@ def _mk(spark, state_dir):
         seeds_path=os.path.join(fix, "seeds.parquet"),
         robots_path=os.path.join(fix, "robots.parquet"),
         as_of=AS_OF,
+        **kw,
     )
 
 
@@ -120,13 +123,18 @@ def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
 
 
 @pytest.mark.parametrize(
-    "table,method",
+    "table,method,kw",
     [
-        ("pending", "commit_delta"),
-        ("fetch_log", "append"),
-        ("metrics", "append"),
-        ("documents", "adopt_part"),
-        (None, "_commit_lineage"),
+        ("pending", "commit_delta", {}),
+        ("fetch_log", "append", {}),
+        ("metrics", "append", {}),
+        ("documents", "adopt_part", {}),
+        (None, "_commit_lineage", {}),
+        ("seen", "append", {}),
+        ("done", "append", {}),
+        # the Bloom path on: the replayed round reads a Bloom that
+        # already holds the crashed round's adds
+        ("url_bloom", "overwrite", {"bloom_min_rows": 0}),
     ],
     ids=[
         "after_pending_commit_delta",
@@ -134,13 +142,16 @@ def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
         "after_metrics_append",
         "after_documents_adopt_part",
         "before_commit_lineage",
+        "after_seen_append",
+        "after_done_append",
+        "after_url_bloom_overwrite",
     ],
 )
 def test_crash_point_resumes_to_uninterrupted_state(
-    spark, tmp_path, monkeypatch, uninterrupted, table, method
+    spark, tmp_path, monkeypatch, uninterrupted, table, method, kw
 ):
     state = str(tmp_path / "crash")
-    run = _mk(spark, state)
+    run = _mk(spark, state, **kw)
     run.init()
     for r in range(1, CRASH_ROUND):
         run.round(r)
@@ -161,7 +172,7 @@ def test_crash_point_resumes_to_uninterrupted_state(
 
     # a fresh CrawlRun on the same state dir: rollback re-commits
     # manifests only — no table gains a data directory
-    resumed = _mk(spark, state)
+    resumed = _mk(spark, state, **kw)
     before = _data_dirs(state)
     assert resumed.resume() == CRASH_ROUND
     assert _data_dirs(state) == before

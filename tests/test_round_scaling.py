@@ -183,7 +183,7 @@ def test_bloom_path_equals_exact_path(spark, tmp_path):
     """bloom_min_rows=0 forces the sharded-Bloom membership path; the
     final crawl state must be identical to the default run's exact
     probe-join path (sf0.001 stays far below the default threshold),
-    and the Bloom tables must actually exist (consulted, not vestigial)."""
+    and the URL Bloom must actually exist (consulted, not vestigial)."""
     fix = fixture_dir("sf0.001")
     a = _mk(spark, tmp_path / "nb", fix)
     a.run(max_rounds=30)
@@ -204,7 +204,6 @@ def test_bloom_path_equals_exact_path(spark, tmp_path):
 
     assert state(a) == state(b)
     assert b.url_bloom.current_snapshot_id() is not None
-    assert b.bloom.current_snapshot_id() is not None
     assert a.url_bloom.current_snapshot_id() is None  # exact path built none
 
 

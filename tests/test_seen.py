@@ -56,11 +56,11 @@ def test_dedupe_matches_plain_antijoin(spark):
     state = bloom_build(spark, seen_df, m_bits=1 << 16)
     exact = set(
         r[0]
-        for r in dedupe_against_seen(cand_df, seen_df, bloom_state=None).collect()
+        for r in dedupe_against_seen(cand_df, seen_df, bloom=None).collect()
     )
     with_bloom = set(
         r[0]
-        for r in dedupe_against_seen(cand_df, seen_df, bloom_state=state).collect()
+        for r in dedupe_against_seen(cand_df, seen_df, bloom=state).collect()
     )
     assert exact == with_bloom
 
