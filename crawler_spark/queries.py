@@ -3282,13 +3282,21 @@ FROM best WHERE rn = 1
 # Registry
 # ===========================================================================
 
-# Registry order = driver sweep order.  The round-4 driver run covered
-# only the first 50 entries (the tail 5 were silently truncated —
-# VERDICT What's-wrong #1), so entries are ordered CHEAPEST-FIRST with
-# the oracle-paired queries ahead of the justified rows-only ones: any
-# time/count budget cut lands on the most expensive / weakest-checked
-# tail, never on a cheap paired query.
+# Registry order = driver sweep order, and a sweep cut by a time or
+# count budget only checks a prefix (the round-4 driver run covered only
+# the first 50 entries — VERDICT What's-wrong #1).  So the six
+# oracle-paired queries that no driver correctness sweep has ever
+# reached go FIRST, whatever their cost; the rest follow CHEAPEST-FIRST
+# with the oracle-paired queries ahead of the justified rows-only ones,
+# so any cut lands on the most expensive / weakest-checked tail.
 QUERIES = {
+    # -- oracle-paired, never yet checked by a driver sweep -----------------
+    "ann_ivf_frozen": q_ann_ivf_frozen,
+    "cluster_assign": q_cluster_assign,
+    "dedup_components": q_dedup_components,
+    "dedup_span": q_span_dedup,
+    "hostgraph_pagerank": q_hostgraph_pagerank,
+    "text_repetition": q_text_repetition,
     # -- cheap single-projection scalar queries -----------------------------
     "text_tokens": q_text_tokens,
     "text_quality": q_text_quality,
@@ -3346,17 +3354,12 @@ QUERIES = {
     "emb_neardup_lsh": q_emb_neardup_lsh,
     "ann_cosine_topk": q_ann_cosine_topk,
     "ann_lsh": q_ann_lsh,
-    "ann_ivf_frozen": q_ann_ivf_frozen,
-    "cluster_assign": q_cluster_assign,
     "stopword_topk": q_stopword_topk,
     "politeness_topk": q_politeness_topk,
     "windowed_agg": q_windowed_agg,
     "sessionize": q_sessionize,
     "skew_salted_agg": q_skew_salted_agg,
-    "hostgraph_pagerank": q_hostgraph_pagerank,
     # -- heavier shuffles / n-gram explodes / simulations --------------------
-    "text_repetition": q_text_repetition,
-    "dedup_span": q_span_dedup,
     "keywords_topk": q_keywords_topk,
     "keywords_full": q_keywords_full,
     "timeline_full": q_timeline_full,
@@ -3367,7 +3370,6 @@ QUERIES = {
     "frontier_schedule_sim": q_frontier_schedule_sim,
     "contamination_check": q_contamination,
     "dedup_simhash": q_dedup_simhash,
-    "dedup_components": q_dedup_components,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "kmeans_clusters": q_kmeans_clusters,

@@ -11,13 +11,17 @@ in parallel — the reference's own loop structure, parallelized across its
 outer dimension (SURVEY.md §7.3.2).
 
 Commit protocol per round: documents / seen / fetch_log / frontier /
-done / metrics commit first, the ``lineage`` row commits LAST and is the
-round's commit point.  The lineage row names the snapshot id of all six
-tables, and resume rolls each one back to it — a metadata-only
-manifest re-commit (``SnapshotTable.rollback``), no data read or
-written — so a crash at any commit point replays the whole round
-idempotently (the reference instead loses its entire run delta on
-crash, ``gdprCrawler.py:292-301``).
+done / metrics / url_bloom / lineage only *stage* snapshots (an
+immutable manifest each; nothing on disk points at it yet).  The round's
+one commit point is an atomic ``os.replace`` of ``state_dir/CATALOG``,
+which names every table's snapshot, the per-shard frontier offsets and
+the URL Bloom's sizing.  A new ``CrawlRun`` sets each table's head from
+the catalog, so it sees exactly the last committed round whichever entry
+point opens the state dir: a crash at any point before the catalog
+write replays the whole round, with nothing to roll back (the reference
+instead loses its entire run delta on crash,
+``gdprCrawler.py:292-301``).  The lineage row records the snapshot of
+all six round tables, for time travel to any round's start.
 
 Frontier state is O(round) per round, not O(frontier):
 
@@ -55,6 +59,7 @@ of the fetch join and are consumed immediately by the mapInArrow stage
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -92,6 +97,9 @@ SCRATCH_FILE = T.StructType(
 SCRATCH_OUT = T.StructType(
     list(SCRATCH_FILE.fields) + [T.StructField("sink", T.StringType(), False)]
 )
+
+# the state dir's commit point: one JSON file, replaced atomically per round
+CATALOG = "CATALOG"
 
 
 def docs_from_extract_parts(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -182,10 +190,6 @@ class CrawlRun:
         # Bloom path (tests do).
         self.bloom_min_rows = bloom_min_rows
 
-        # in-memory carry of per-shard lineage offsets between rounds —
-        # avoids a lineage-table read job per round; invalidated on
-        # resume so the first round after a crash re-reads the durable row
-        self._offsets_cache: dict[int, int] | None = None
         # memoized input DataFrames (immutable parquet inputs): building
         # them once avoids a file-listing + plan-construction cost per
         # round
@@ -196,8 +200,6 @@ class CrawlRun:
         self._force_probe = False
         # lazily computed: does any seeded authority use post-fetch keys?
         self._postfetch: bool | None = None
-        # URL Bloom (m_bits, conservative max items/shard) carry
-        self._bloom_meta: tuple[int, int] | None = None
 
         t = lambda name, sch: SnapshotTable(os.path.join(state_dir, name), sch)
         # the pending set keeps the historical "frontier" directory/column
@@ -218,9 +220,9 @@ class CrawlRun:
         self.fetch_log = t("fetch_log", S.FETCH_LOG)
         self.lineage = t("lineage", S.LINEAGE)
         self.metrics = t("metrics", S.METRICS)
-        # every table a round commits, by its lineage column prefix
+        # every table a round stages, by its lineage column prefix
         # (``<prefix>_snapshot``, in S.LINEAGE order): the lineage row
-        # records all of them and resume rolls all of them back
+        # records all of them
         self.round_tables = (
             ("frontier", self.pending),
             ("done", self.done),
@@ -229,6 +231,7 @@ class CrawlRun:
             ("fetch_log", self.fetch_log),
             ("metrics", self.metrics),
         )
+        self._checkout()
 
     # -- setup / resume -------------------------------------------------------
 
@@ -254,11 +257,34 @@ class CrawlRun:
             self.done.read(self.spark)
         )
 
+    def _catalog_tables(self):
+        return self.round_tables + (
+            ("lineage", self.lineage),
+            ("url_bloom", self.url_bloom),
+        )
+
+    def _checkout(self) -> None:
+        """Set every table's head, the offsets and the Bloom sizing from
+        the catalog (the last committed round); no catalog reads as an
+        empty state dir."""
+        try:
+            with open(os.path.join(self.state_dir, CATALOG)) as f:
+                cat = json.load(f)
+        except FileNotFoundError:
+            cat = None
+        self._catalog = cat
+        snaps = cat["snapshots"] if cat else {}
+        for name, table in self._catalog_tables():
+            table.head = snaps.get(name)
+        # URL Bloom (m_bits, conservative max items/shard), staged next to
+        # the Bloom snapshot and committed with it
+        self._bloom_meta = tuple(cat["bloom"]) if cat and cat["bloom"] else None
+
     def init(self) -> None:
         """Seed the frontier (round 0 commit point).  The URL Bloom is
         created lazily by the first round whose frontier size crosses
         ``bloom_min_rows`` (built from the full frontier at that point)."""
-        if self.pending.current_snapshot_id() is not None:
+        if self._catalog is not None:
             return
         seeded = self.pending.commit_delta(
             self.spark, adds=FR.seed_frontier(self.seeds_df()), note="seed"
@@ -269,49 +295,21 @@ class CrawlRun:
         )
 
     def last_committed_round(self) -> int | None:
-        lin = self.lineage.read(self.spark)
-        row = lin.agg(F.max("round_id").alias("r")).collect()[0]
-        return None if row["r"] is None else int(row["r"])
+        return None if self._catalog is None else self._catalog["round_id"]
 
     def resume(self) -> int:
-        """Roll every round table back to the last lineage commit point.
+        """Return the next round id to run after a crash.
 
-        Returns the next round id to run.  Any partial commits after the
-        last lineage row are discarded by re-committing each table's
-        manifest at the snapshot id the row records — metadata only, no
-        table data is read or written.  Leftover scratch from a crashed
-        round is purged here (it is re-derived by replaying the round).
-        The URL Bloom is *not* rolled back: a Bloom that is ahead of its
-        base table only adds false positives, which the exact residue
-        check absorbs.
+        Purges leftover scratch from a crashed round (it is re-derived by
+        replaying the round) and re-reads the catalog, dropping whatever
+        this object staged since the last commit.  No table file is read
+        or written.  A state dir with no committed round returns 1 and
+        still needs ``init()``; ``run()`` seeds and picks its start round
+        itself.
         """
         shutil.rmtree(os.path.join(self.state_dir, "scratch"), ignore_errors=True)
-        self._offsets_cache = None
-        self._bloom_meta = None
-        cols = [f"{prefix}_snapshot" for prefix, _ in self.round_tables]
-        last = (
-            self.lineage.read(self.spark)
-            .orderBy(F.desc("round_id"))
-            .select("round_id", *cols)
-            .limit(1)
-            .collect()
-        )
-        if not last:
-            self.init()
-            return 1
-        missing = [c for c in cols if last[0][c] is None]
-        if missing:
-            # a lineage row from an older layout reads absent columns as
-            # null; rolling those tables back to empty would drop data
-            raise ValueError(
-                f"lineage row of round {last[0]['round_id']} has no {missing}: "
-                f"state dir {self.state_dir} predates this layout, regenerate it"
-            )
-        for col, (_, table) in zip(cols, self.round_tables):
-            sid = last[0][col] or None  # "" = no snapshot at the commit point
-            if table.current_snapshot_id() != sid:
-                table.rollback(sid, note=f"rollback-to-{sid or 'empty'}")
-        return int(last[0]["round_id"]) + 1
+        self._checkout()
+        return (self.last_committed_round() or 0) + 1
 
     def _pending_rows_bound(self) -> int:
         """Upper bound on visible pending rows from the manifest's part
@@ -349,22 +347,8 @@ class CrawlRun:
 
     def _enqueued_total(self) -> int:
         """Total URLs ever enqueued (drives the Bloom activation
-        threshold) — free from the in-memory offsets carry; one lineage
-        read only on the first round after init/resume."""
-        if self._offsets_cache is None:
-            last = self.last_committed_round()
-            if last is None:
-                return 0
-            self._offsets_cache = {
-                int(r["partition_id"]): int(r["frontier_offset"])
-                for r in (
-                    self.lineage.read(self.spark)
-                    .filter(F.col("round_id") == last)
-                    .select("partition_id", "frontier_offset")
-                    .collect()
-                )
-            }
-        return sum(self._offsets_cache.values())
+        threshold): the sum of the committed per-shard offsets."""
+        return sum(n for _, n in self._catalog["offsets"]) if self._catalog else 0
 
     def _shard_counts(self, df: DataFrame) -> dict[int, int]:
         """Per-shard row counts of a round-sized delta (tiny collect)."""
@@ -397,27 +381,16 @@ class CrawlRun:
         extracted: int,
         delta_by_shard: dict[int, int] | None = None,
     ) -> None:
-        """One lineage row per url_hash shard (per-partition offsets).
+        """One lineage row per url_hash shard (per-partition offsets),
+        then the round's commit point: the catalog write.
 
         Offsets are *incremental*: previous round's offsets plus this
         round's per-shard add counts — O(round) work, replacing the full
         frontier groupBy(shard).count() (VERDICT round 1, finding 4).
         """
-        offsets: dict[int, int] = {}
-        if round_id > 0:
-            if self._offsets_cache is not None:
-                offsets = dict(self._offsets_cache)
-            else:
-                for r in (
-                    self.lineage.read(self.spark)
-                    .filter(F.col("round_id") == round_id - 1)
-                    .select("partition_id", "frontier_offset")
-                    .collect()
-                ):
-                    offsets[int(r["partition_id"])] = int(r["frontier_offset"])
+        offsets = dict(self._catalog["offsets"]) if self._catalog else {}
         for pid, n in (delta_by_shard or {}).items():
             offsets[pid] = offsets.get(pid, 0) + n
-        self._offsets_cache = dict(offsets)
         sids = [t.current_snapshot_id() or "" for _, t in self.round_tables]
         rows = [
             (round_id, *sids, pid, off, fetched, extracted)
@@ -428,6 +401,17 @@ class CrawlRun:
             rows, T.StructType(S.LINEAGE.fields[:-1])
         ).withColumn("committed_ts", F.current_timestamp())
         self.lineage.append(df, note=f"round-{round_id}")
+        catalog = {
+            "round_id": round_id,
+            "snapshots": {name: t.head for name, t in self._catalog_tables()},
+            "offsets": sorted(offsets.items()),
+            "bloom": self._bloom_meta,
+        }
+        path = os.path.join(self.state_dir, CATALOG)
+        with open(path + ".tmp", "w") as f:
+            json.dump(catalog, f)
+        os.replace(path + ".tmp", path)  # atomic: the round commits here
+        self._catalog = catalog
 
     def _bloom_commit(
         self,
@@ -441,11 +425,11 @@ class CrawlRun:
         fixed 1<<20 bitset caps out at ~10^6 hashes/shard).
 
         Sizing state (per-shard m_bits + conservative item-count bound)
-        is carried in memory between rounds and seeded from one 32-row
-        stats read per run — the steady-state round pays zero extra
-        jobs.  ``est_new_per_shard`` conservatively over-counts this
-        delta (early resize is harmless; a LATE resize only raises FP
-        rate, never correctness — the exact residue join stays
+        is carried in the catalog, committed with the Bloom snapshot —
+        the steady-state round pays zero extra jobs.
+        ``est_new_per_shard`` conservatively over-counts this delta
+        (early resize is harmless; a LATE resize only raises FP rate,
+        never correctness — the exact residue join stays
         authoritative).  First activation (lazy threshold crossing) and
         resizes rebuild from ``full`` (all hashes) — an O(table) job
         that happens O(log n) times total, so amortized per-round cost
@@ -453,17 +437,7 @@ class CrawlRun:
         """
         table = self.url_bloom
         prior = table.read(self.spark) if table.current_snapshot_id() else None
-        if self._bloom_meta is None:
-            cur_m, max_n = SN.DEFAULT_M_BITS, 0
-            if prior is not None:
-                stats = prior.select(
-                    (F.length("bits") * 8).alias("m"), "n_items"
-                ).collect()
-                if stats:
-                    cur_m = max(int(r["m"]) for r in stats)
-                    max_n = max(int(r["n_items"]) for r in stats)
-        else:
-            cur_m, max_n = self._bloom_meta
+        cur_m, max_n = self._bloom_meta or (SN.DEFAULT_M_BITS, 0)
         max_n += est_new_per_shard
         target = SN.bloom_target_bits(max_n)
         if prior is None or target > cur_m:
@@ -910,13 +884,13 @@ class CrawlRun:
             )
         )
 
-        # -- commits (lineage last = commit point) ----------------------------
+        # -- commits (the catalog write last = commit point) ------------------
         # The five data-table writes have independent DAGs (all rooted in
         # the materialized scratch + the persisted scheduled/flagged/
         # sched_out frames), so they run as CONCURRENT Spark jobs — round
-        # wall pays max(write) instead of sum(write).  Crash consistency
-        # is unchanged: resume only trusts tables up to the lineage row,
-        # which still commits strictly last on the driver thread.
+        # wall pays max(write) instead of sum(write).  Each only stages a
+        # snapshot of its own table; the round becomes visible at the
+        # catalog write, strictly last on the driver thread.
         from concurrent.futures import ThreadPoolExecutor
 
         note = f"round-{round_id}"
@@ -966,8 +940,8 @@ class CrawlRun:
             # RENAME — driver-side metadata only (footer row counts +
             # manifest append).  Strictly after the commit window: every
             # Spark job scanning the scratch files has completed, so no
-            # task can race the rename; strictly before lineage, which
-            # records the documents snapshot id.  A zero-doc round
+            # task can race the rename; strictly before lineage and the
+            # catalog, which record the documents snapshot id.  A zero-doc round
             # writes no ``sink=doc`` partition — nothing to adopt.
             doc_part_dir = os.path.join(scratch, "sink=doc")
             if os.path.isdir(doc_part_dir):

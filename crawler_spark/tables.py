@@ -2,23 +2,33 @@
 
 The north rule calls for Iceberg tables with snapshot commits and
 time-travel.  The sandbox has no iceberg-spark-runtime jar, so this module
-implements the same *discipline* over plain parquet: every commit writes
-an immutable data directory plus a manifest JSON listing the directories
-that make up the new snapshot, then atomically flips a CURRENT pointer
-(``os.replace``).  Readers resolve a snapshot (latest or by id) to a list
-of parquet paths and hand them to ``spark.read.parquet`` — so predicate
-pushdown, column pruning and partition-parallel scans all still apply.
+implements the same *discipline* over plain parquet: every write lands an
+immutable data directory plus an immutable manifest JSON listing the
+directories that make up the new snapshot, and moves the table's
+in-memory ``head`` to it.  Readers resolve a snapshot (the head or one by
+id) to a list of parquet paths and hand them to ``spark.read.parquet`` —
+so predicate pushdown, column pruning and partition-parallel scans all
+still apply.
 
-Every manifest part entry has one shape, ``{path, seq, rows[, layout]}``:
-the commit sequence number the part was written at, its footer row
-count, and — for adopted parts — the layout tag its reader is keyed by.
+A write only *stages* its snapshot: nothing on disk points at it until
+the owner commits.  ``rounds.CrawlRun`` commits all of its tables at once
+by an atomic replace of one catalog file naming every table's snapshot
+(Iceberg's multi-table catalog commit), and sets each table's head from
+that catalog when it opens a state dir — so a crash between two writes
+leaves no half-committed state to roll back.
+
+Every manifest carries its sequence number, ``seq = parent.seq + 1``
+(0 for a table's first snapshot; Iceberg's ``last-sequence-number``), and
+the snapshot id is ``s{seq:08d}-{uuid8}``.  Every part entry has one
+shape, ``{path, seq, rows[, layout]}``: the sequence number of the
+snapshot that wrote it, its footer row count, and — for adopted parts —
+the layout tag its reader is keyed by.
 
 On a real cluster, swap ``SnapshotTable`` for ``spark.table(...)`` +
 ``df.writeTo(...).append()`` against an Iceberg catalog — the engine only
-uses the five operations below (read / append / overwrite / time-travel /
-rollback), all of which Iceberg provides natively.  Rollback is
-metadata-only, like Iceberg's ``rollback_to_snapshot``: it re-commits an
-earlier snapshot's manifest and touches no data file.
+uses read / stage (append, overwrite, adopt, merge-on-read delta) / time
+travel, and commits through the catalog, all of which Iceberg provides
+natively.
 
 Reference behavior replaced: the crawler's only "commit" is an
 end-of-run append+flush of visitedDocs.txt (``gdprCrawler.py:292-301``) —
@@ -38,11 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_CURRENT = "CURRENT"
+# the manifest of a table with no snapshot: the first commit gets seq 0
+_EMPTY = {"seq": -1, "parts": [], "delete_parts": []}
 
 
 class SnapshotTable:
-    """An append-mostly table with atomic snapshot commits + time travel."""
+    """An append-mostly table with staged snapshot commits + time travel."""
 
     def __init__(self, root: str, schema: T.StructType):
         self.root = root
@@ -55,18 +66,14 @@ class SnapshotTable:
         self.layout_readers: dict = {}
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
+        # the snapshot reads resolve to and the next write's parent; the
+        # owner sets it from its catalog (None: the table is empty)
+        self.head: str | None = None
 
     # -- snapshot bookkeeping -------------------------------------------------
 
-    def _current_path(self) -> str:
-        return os.path.join(self.root, _CURRENT)
-
     def current_snapshot_id(self) -> str | None:
-        try:
-            with open(self._current_path()) as f:
-                return f.read().strip() or None
-        except FileNotFoundError:
-            return None
+        return self.head
 
     def _manifest_path(self, snapshot_id: str) -> str:
         return os.path.join(self.root, "snapshots", snapshot_id + ".json")
@@ -76,38 +83,30 @@ class SnapshotTable:
             return json.load(f)
 
     def _manifest(self, snapshot_id: str | None = None) -> dict:
-        """Manifest of ``snapshot_id`` (default: current); an empty one
+        """Manifest of ``snapshot_id`` (default: the head); an empty one
         when the table has no snapshot yet."""
-        sid = snapshot_id or self.current_snapshot_id()
-        if sid is None:
-            return {"parts": [], "delete_parts": []}
-        return self._read_manifest(sid)
-
-    def snapshots(self) -> list[str]:
-        d = os.path.join(self.root, "snapshots")
-        return sorted(p[:-5] for p in os.listdir(d) if p.endswith(".json"))
+        sid = snapshot_id or self.head
+        return _EMPTY if sid is None else self._read_manifest(sid)
 
     def _commit(
-        self, parts: list[str], note: str, delete_parts: list[str] | None = None
+        self, seq: int, parts: list, note: str, delete_parts: list | None = None
     ) -> str:
-        prev = self.current_snapshot_id()
-        snapshot_id = f"s{len(self.snapshots()):08d}-{uuid.uuid4().hex[:8]}"
+        """Write the manifest of a new snapshot (sequence ``seq``, parent
+        the head) and move the head to it — staged until the owner's
+        catalog names it."""
+        snapshot_id = f"s{seq:08d}-{uuid.uuid4().hex[:8]}"
         manifest = {
             "snapshot_id": snapshot_id,
-            "parent": prev,
+            "parent": self.head,
+            "seq": seq,
             "parts": parts,
             "delete_parts": delete_parts or [],
             "note": note,
             "committed_at": time.time(),
         }
-        tmp = self._manifest_path(snapshot_id) + ".tmp"
-        with open(tmp, "w") as f:
+        with open(self._manifest_path(snapshot_id), "w") as f:
             json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(snapshot_id))
-        cur_tmp = self._current_path() + ".tmp"
-        with open(cur_tmp, "w") as f:
-            f.write(snapshot_id)
-        os.replace(cur_tmp, self._current_path())  # atomic pointer flip
+        self.head = snapshot_id
         return snapshot_id
 
     # -- writes ---------------------------------------------------------------
@@ -131,37 +130,38 @@ class SnapshotTable:
             for f in glob.glob(os.path.join(self.root, part, "*.parquet"))
         )
 
-    def _new_entry(self, part: str) -> dict:
-        entry = {
-            "path": part,
-            "seq": len(self.snapshots()),  # monotone per-commit sequence
-            "rows": self._part_rows(part),
-        }
+    def _new_entry(self, part: str, seq: int) -> dict:
+        entry = {"path": part, "seq": seq, "rows": self._part_rows(part)}
         # rows of the most recent part written — free manifest statistic
         # for callers that need delta sizes without a count job
         self.last_append_rows = entry["rows"]
         return entry
 
+    def _add_part(self, part: str, note: str, layout: str | None = None) -> str:
+        m = self._manifest()
+        seq = m["seq"] + 1
+        entry = self._new_entry(part, seq)
+        if layout is not None:
+            entry["layout"] = layout
+        return self._commit(seq, m["parts"] + [entry], note)
+
     def append(self, df: DataFrame, note: str = "append") -> str:
-        parts = list(self._manifest()["parts"])
-        parts.append(self._new_entry(self._write_part(df)))
-        return self._commit(parts, note)
+        return self._add_part(self._write_part(df), note)
 
     def append_read(self, spark: SparkSession, df: DataFrame, note: str = "append"):
         """Append ``df`` and return (snapshot_id, re-read of the part just
         written).  The re-read is a plain parquet scan of the delta —
         a caller that needs the delta again reuses the materialized
         bytes instead of recomputing the delta's whole upstream DAG."""
-        parts = list(self._manifest()["parts"])
         new_part = self._write_part(df)
-        parts.append(self._new_entry(new_part))
-        sid = self._commit(parts, note)
+        sid = self._add_part(new_part, note)
         return sid, spark.read.schema(self.schema).parquet(
             os.path.join(self.root, new_part)
         )
 
     def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
-        return self._commit([self._new_entry(self._write_part(df))], note)
+        seq = self._manifest()["seq"] + 1
+        return self._commit(seq, [self._new_entry(self._write_part(df), seq)], note)
 
     def adopt_part(self, src_dir: str, note: str, layout: str) -> str:
         """Commit an already-materialized parquet directory as a new part
@@ -182,23 +182,7 @@ class SnapshotTable:
             os.rename(src_dir, dst)
         except OSError:  # cross-device state layouts: fall back to copy
             shutil.move(src_dir, dst)
-        entry = self._new_entry(part)
-        entry["layout"] = layout
-        parts = list(self._manifest()["parts"])
-        parts.append(entry)
-        return self._commit(parts, note)
-
-    def rollback(self, snapshot_id: str | None, note: str) -> str:
-        """Make ``snapshot_id`` current again by committing its manifest
-        (``None``: an empty one) as a NEW snapshot — metadata only, no
-        data file is read or written (Iceberg's ``rollback_to_snapshot``).
-        Committing forward instead of moving the pointer back keeps the
-        per-commit sequence number monotone, so parts written after the
-        rollback still order after every part it restores."""
-        m = self._read_manifest(snapshot_id) if snapshot_id else {}
-        return self._commit(
-            m.get("parts", []), note, delete_parts=m.get("delete_parts")
-        )
+        return self._add_part(part, note, layout)
 
     # -- reads ----------------------------------------------------------------
 
@@ -294,7 +278,8 @@ class MorTable(SnapshotTable):
         sequence ``seq`` in its ``__seq`` (``__tseq``) column."""
         col, sch = ("__tseq", self._del_schema()) if tomb else ("__seq", self._add_schema())
         return self._new_entry(
-            self._write_part(df.withColumn(col, F.lit(seq).cast("long")), schema=sch)
+            self._write_part(df.withColumn(col, F.lit(seq).cast("long")), schema=sch),
+            seq,
         )
 
     def _read_from(
@@ -327,7 +312,8 @@ class MorTable(SnapshotTable):
     def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
         """Replace the table with ``df`` as one base part — the
         compaction writer's shape, so every part keeps ``__seq``."""
-        return self._commit([self._seq_entry(df, len(self.snapshots()))], note)
+        seq = self._manifest()["seq"] + 1
+        return self._commit(seq, [self._seq_entry(df, seq)], note)
 
     def commit_delta(
         self,
@@ -341,7 +327,7 @@ class MorTable(SnapshotTable):
         reuse the materialized delta without recomputing its DAG."""
         m = self._manifest()
         parts, dels = list(m["parts"]), list(m["delete_parts"])
-        seq = len(self.snapshots())  # this commit's sequence number
+        seq = m["seq"] + 1  # this commit's sequence number
         add = None
         if adds is not None:
             add = self._seq_entry(adds, seq)
@@ -359,7 +345,7 @@ class MorTable(SnapshotTable):
             parts = [self._seq_entry(self._read_from(spark, parts, dels), seq)]
             dels = []
             note += "+compact"
-        self._commit(parts, note, delete_parts=dels)
+        self._commit(seq, parts, note, delete_parts=dels)
         if add is None:
             return None
         return spark.read.schema(self.schema).parquet(*self._paths([add]))

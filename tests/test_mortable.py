@@ -106,37 +106,6 @@ def test_part_count_backstop_still_compacts(spark, tmp_path):
     assert t.read(spark).count() == 4
 
 
-def test_rollback_recommits_manifest_without_data_io(spark, tmp_path):
-    """Rollback commits the target snapshot's manifest as a new snapshot:
-    no data file is written, and commits after it still order after
-    every restored part (a later tombstone shadows a restored row)."""
-    t = _mk(tmp_path)
-    df = lambda rows: spark.createDataFrame(rows, SCHEMA)
-    t.commit_delta(spark, adds=df([(1, 0, "a"), (2, 0, "b")]))
-    sid = t.current_snapshot_id()
-    t.commit_delta(
-        spark,
-        adds=df([(3, 0, "c")]),
-        deletes=df([(1, 0, "_")]).select("k", "retry"),
-    )
-    assert _rows(spark, t) == [(2, 0, "b"), (3, 0, "c")]
-    data = os.path.join(t.root, "data")
-    before = sorted(os.listdir(data))
-
-    t.rollback(sid, note="rollback")
-    assert sorted(os.listdir(data)) == before
-    assert t._manifest()["parts"] == t._manifest(sid)["parts"]
-    assert _rows(spark, t) == [(1, 0, "a"), (2, 0, "b")]
-
-    t.commit_delta(spark, deletes=df([(2, 0, "_")]).select("k", "retry"))
-    assert _rows(spark, t) == [(1, 0, "a")]
-
-    after_delete = sorted(os.listdir(data))
-    t.rollback(None, note="rollback-to-empty")
-    assert sorted(os.listdir(data)) == after_delete
-    assert _rows(spark, t) == []
-
-
 def test_overwrite_writes_a_seq_part(spark, tmp_path):
     """overwrite goes through the compaction writer: the one base part
     carries __seq, so tombstones from later commits still apply."""

@@ -1,17 +1,22 @@
-"""Checkpoint/resume: kill after round k (+ partial commit), resume from
-lineage, final state identical to an uninterrupted run (SURVEY.md §5.4).
+"""Checkpoint/resume: kill after round k (+ partial commit), restart on
+the same state dir, final state identical to an uninterrupted run
+(SURVEY.md §5.4).
 
 The reference loses its whole run delta on crash (seen-set flushed only
-at end, gdprCrawler.py:292-301); the engine's per-round lineage commit
+at end, gdprCrawler.py:292-301); the engine's per-round catalog commit
 makes any crash replay idempotent.  The crash-point cases raise right
-after each commit of round 3 (or just before its lineage row) and
-require all six round tables — row counts included — to come out equal
-to an uninterrupted run, with resume touching manifests only.  The URL
-Bloom is not rolled back: the case that crashes after its overwrite
-checks that a Bloom ahead of its base table only adds false positives.
+after each staged write of round 3 (or just before its lineage row, or
+after the lineage append but before the catalog write, or inside
+``init()``) and require all six round tables — row counts included — to
+come out equal to an uninterrupted run.  Each case restarts two ways:
+``resume()`` then rounds, and a plain ``run()`` (what the bench and the
+spark-submit driver call).  Opening and resuming the state dir touch no
+file under any table directory, and every table's manifest chain from
+the catalog head carries consecutive sequence numbers.
 """
 
 import glob
+import json
 import os
 
 import pyarrow.parquet as pq
@@ -20,10 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crawler_spark.fixtures import AS_OF, fixture_dir
-from crawler_spark.rounds import CrawlRun
+from crawler_spark.rounds import CATALOG, CrawlRun
 
 CRASH_ROUND = 3
 ROUND_TABLES = ("pending", "done", "seen", "documents", "fetch_log", "metrics")
+RESTARTS = ("resume", "run")
 
 
 class Crash(RuntimeError):
@@ -65,22 +71,64 @@ def _run_to_end(run, start):
     raise AssertionError("crawl did not drain in 50 rounds")
 
 
-def _data_dirs(state_dir):
-    return {
-        (name, part)
-        for name in os.listdir(state_dir)
-        if os.path.isdir(os.path.join(state_dir, name, "data"))
-        for part in os.listdir(os.path.join(state_dir, name, "data"))
-    }
+def _table_files(state_dir):
+    """Every file under every table directory, with size and mtime."""
+    out = {}
+    for name in os.listdir(state_dir):
+        top = os.path.join(state_dir, name)
+        if name == "scratch" or not os.path.isdir(top):
+            continue
+        for root, _, files in os.walk(top):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                out[os.path.relpath(os.path.join(root, f), state_dir)] = (
+                    st.st_size,
+                    st.st_mtime_ns,
+                )
+    return out
 
 
-def _assert_pending_parts_carry_seq(pending):
-    m = pending._manifest()
+def _assert_seq_chains(run):
+    """Walking each table's parents from the committed catalog head,
+    every manifest's seq is its parent's plus 1 (0 at the root), and
+    every pending part stores its entry's seq in ``__seq``/``__tseq``."""
+    with open(os.path.join(run.state_dir, CATALOG)) as f:
+        heads = json.load(f)["snapshots"]
+    for name, table in run._catalog_tables():
+        chain, sid = [], heads[name]
+        while sid:
+            chain.append(table._read_manifest(sid))
+            sid = chain[-1]["parent"]
+        assert [m["seq"] for m in chain] == list(range(len(chain)))[::-1], name
+        for m in chain:
+            assert m["snapshot_id"].startswith(f"s{m['seq']:08d}-"), m
+            assert all(e["seq"] <= m["seq"] for e in m["parts"]), m
+    m = run.pending._read_manifest(heads["frontier"])
     for key, col in (("parts", "__seq"), ("delete_parts", "__tseq")):
         for e in m[key]:
-            files = glob.glob(os.path.join(pending.root, e["path"], "*.parquet"))
+            files = glob.glob(os.path.join(run.pending.root, e["path"], "*.parquet"))
             assert files, e
-            assert all(col in pq.read_schema(f).names for f in files), e
+            for f in files:
+                seqs = set(pq.read_table(f, columns=[col])[col].to_pylist())
+                assert seqs <= {e["seq"]}, e
+
+
+def _restart(spark, state, restart, start, **kw):
+    """A new CrawlRun on a crashed state dir, driven to the end by
+    ``resume()`` + rounds or by a plain ``run()``.  Opening and resuming
+    must leave every table file as it was."""
+    before = _table_files(state)
+    run = _mk(spark, state, **kw)
+    if restart == "resume":
+        assert run.resume() == start
+    assert _table_files(state) == before
+    if restart == "resume":
+        run.init()  # a no-op once round 0 is committed
+        _run_to_end(run, start)
+    else:
+        run.run(max_rounds=50)
+    _assert_seq_chains(run)
+    return run
 
 
 @pytest.fixture(scope="module")
@@ -92,7 +140,7 @@ def uninterrupted(spark, tmp_path_factory):
 
 def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
     # interrupted run: 2 rounds, then a simulated crash mid-round-3 —
-    # documents got appended but lineage (the commit point) did not
+    # documents got a junk append staged, but no catalog commit followed
     part = _mk(spark, str(tmp_path / "part"))
     part.init()
     part.round(1)
@@ -108,7 +156,8 @@ def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
         == 3
     )
 
-    # resume: rolls documents back to round-2 snapshot, junk gone
+    # a new CrawlRun opens the round-2 catalog commit: the staged junk
+    # snapshot is never visible to it
     resumed = _mk(spark, str(tmp_path / "part"))
     next_round = resumed.resume()
     assert next_round == 3
@@ -122,33 +171,34 @@ def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
     assert _final_state(resumed) == uninterrupted
 
 
+CRASH_POINTS = [
+    ("after_pending_commit_delta", "pending", "commit_delta", {}),
+    ("after_fetch_log_append", "fetch_log", "append", {}),
+    ("after_metrics_append", "metrics", "append", {}),
+    ("after_documents_adopt_part", "documents", "adopt_part", {}),
+    ("before_commit_lineage", None, "_commit_lineage", {}),
+    ("after_seen_append", "seen", "append", {}),
+    ("after_done_append", "done", "append", {}),
+    # the Bloom path on: the crashed round staged a Bloom holding its
+    # adds, which the replay must not read
+    ("after_url_bloom_overwrite", "url_bloom", "overwrite", {"bloom_min_rows": 0}),
+    # the lineage part is staged, the catalog is not written
+    ("after_lineage_append", "lineage", "append", {}),
+]
+
+
+# the resume() restart keeps the bare crash-point id; run() adds "-run"
 @pytest.mark.parametrize(
-    "table,method,kw",
+    "table,method,kw,restart",
     [
-        ("pending", "commit_delta", {}),
-        ("fetch_log", "append", {}),
-        ("metrics", "append", {}),
-        ("documents", "adopt_part", {}),
-        (None, "_commit_lineage", {}),
-        ("seen", "append", {}),
-        ("done", "append", {}),
-        # the Bloom path on: the replayed round reads a Bloom that
-        # already holds the crashed round's adds
-        ("url_bloom", "overwrite", {"bloom_min_rows": 0}),
-    ],
-    ids=[
-        "after_pending_commit_delta",
-        "after_fetch_log_append",
-        "after_metrics_append",
-        "after_documents_adopt_part",
-        "before_commit_lineage",
-        "after_seen_append",
-        "after_done_append",
-        "after_url_bloom_overwrite",
+        pytest.param(table, method, kw, restart,
+                     id=name if restart == "resume" else f"{name}-{restart}")
+        for name, table, method, kw in CRASH_POINTS
+        for restart in RESTARTS
     ],
 )
 def test_crash_point_resumes_to_uninterrupted_state(
-    spark, tmp_path, monkeypatch, uninterrupted, table, method, kw
+    spark, tmp_path, monkeypatch, uninterrupted, table, method, kw, restart
 ):
     state = str(tmp_path / "crash")
     run = _mk(spark, state, **kw)
@@ -156,8 +206,8 @@ def test_crash_point_resumes_to_uninterrupted_state(
     for r in range(1, CRASH_ROUND):
         run.round(r)
 
-    # the commit at the crash point lands (table methods), or the round
-    # dies just before its lineage row — either way lineage is not written
+    # the write at the crash point lands (table methods), or the round
+    # dies just before its lineage row — either way no catalog commit
     target = run if table is None else getattr(run, table)
     orig = getattr(target, method)
 
@@ -170,17 +220,31 @@ def test_crash_point_resumes_to_uninterrupted_state(
     with pytest.raises(Crash):
         run.round(CRASH_ROUND)
 
-    # a fresh CrawlRun on the same state dir: rollback re-commits
-    # manifests only — no table gains a data directory
-    resumed = _mk(spark, state, **kw)
-    before = _data_dirs(state)
-    assert resumed.resume() == CRASH_ROUND
-    assert _data_dirs(state) == before
-    _assert_pending_parts_carry_seq(resumed.pending)
-
-    _run_to_end(resumed, CRASH_ROUND)
+    resumed = _restart(spark, state, restart, CRASH_ROUND, **kw)
     assert _final_state(resumed) == uninterrupted
-    _assert_pending_parts_carry_seq(resumed.pending)
+
+
+@pytest.mark.parametrize("restart", RESTARTS)
+def test_crash_in_init_replays_the_seed(
+    spark, tmp_path, monkeypatch, uninterrupted, restart
+):
+    """The seed delta is staged but round 0's catalog is not written:
+    the restart sees an empty state dir and seeds again."""
+    state = str(tmp_path / "crash")
+    run = _mk(spark, state)
+    orig = run.pending.commit_delta
+
+    def crashing(*args, **kwargs):
+        orig(*args, **kwargs)
+        raise Crash("commit_delta")
+
+    monkeypatch.setattr(run.pending, "commit_delta", crashing)
+    with pytest.raises(Crash):
+        run.init()
+    assert not os.path.exists(os.path.join(state, CATALOG))
+
+    resumed = _restart(spark, state, restart, 1)
+    assert _final_state(resumed) == uninterrupted
 
 
 def test_time_travel_reads(spark, tmp_path):
@@ -193,17 +257,3 @@ def test_time_travel_reads(spark, tmp_path):
     n_at_2 = run.documents.read(spark).count()
     assert n_at_2 >= n_at_1
     assert run.documents.read(spark, snap1).count() == n_at_1  # stable
-
-
-def test_resume_rejects_lineage_without_table_snapshots(spark, tmp_path):
-    """A lineage row that names fewer tables (an older state layout)
-    must stop resume, not roll the unnamed tables back to empty."""
-    state = str(tmp_path / "old")
-    run = _mk(spark, state)
-    run.init()
-    old = run.lineage.read(spark).drop("fetch_log_snapshot", "metrics_snapshot")
-    part = os.path.join("data", "old-layout")
-    old.write.parquet(os.path.join(run.lineage.root, part))
-    run.lineage._commit([{"path": part, "seq": 0, "rows": 1}], "old-layout")
-    with pytest.raises(ValueError, match="predates"):
-        _mk(spark, state).resume()
