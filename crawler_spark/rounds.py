@@ -10,18 +10,24 @@ chain advances one page per round while thousands of chains/hosts advance
 in parallel — the reference's own loop structure, parallelized across its
 outer dimension (SURVEY.md §7.3.2).
 
-Commit protocol per round: documents / seen / fetch_log / frontier /
-done / metrics / url_bloom / lineage only *stage* snapshots (an
-immutable manifest each; nothing on disk points at it yet).  The round's
-one commit point is an atomic ``os.replace`` of ``state_dir/CATALOG``,
-which names every table's snapshot, the per-shard frontier offsets and
-the URL Bloom's sizing.  A new ``CrawlRun`` sets each table's head from
-the catalog, so it sees exactly the last committed round whichever entry
-point opens the state dir: a crash at any point before the catalog
-write replays the whole round, with nothing to roll back (the reference
-instead loses its entire run delta on crash,
-``gdprCrawler.py:292-301``).  The lineage row records the snapshot of
-all six round tables, for time travel to any round's start.
+Commit protocol per round: the round writes twice — the extract scratch
+(``sink=doc|rest``) and ONE slim write partitioned by sink that holds
+every round table's part (seen, fetch_log, done, pending adds and
+tombstones, metrics, post-fetch-keyed documents).  Each table takes its
+part by rename (``adopt_part``; pending by one ``commit_delta`` of two
+adopted parts), the documents table also adopts the extract's
+``sink=doc``, and the driver reads the document count and per-shard add
+counts from the adopted parts with pyarrow.  Every table only *stages*
+snapshots (an immutable manifest each; nothing on disk points at it
+yet).  The round's one commit point is an atomic ``os.replace`` of
+``state_dir/CATALOG``, naming every table's snapshot, the per-shard
+frontier offsets and the URL Bloom's sizing.  A new ``CrawlRun`` sets
+each table's head from the catalog, so it sees exactly the last
+committed round whichever entry point opens the state dir: a crash at
+any point before the catalog write replays the whole round, with
+nothing to roll back (the reference instead loses its entire run delta
+on crash, ``gdprCrawler.py:292-301``).  The lineage row records the
+snapshot of all six round tables, for time travel to any round's start.
 
 Frontier state is O(round) per round, not O(frontier):
 
@@ -45,6 +51,15 @@ Frontier state is O(round) per round, not O(frontier):
   shuffled.  P5 additionally goes through the sharded URL Bloom once
   the frontier is big enough to pay for it.
 
+Survivor rule: when several rows of one round carry the same key — two
+listing pages linking the same next page, or two output rows for one
+fetched URL — the row with the smallest ``seq`` survives, the
+reference's first-enqueued rule (``Pagination.add_item``; oracle
+``fixtures.sequential_oracle``), whatever the partitioning.  URL dedupe
+is across authorities: a URL already enqueued under any seed is not
+enqueued again, while the oracle's ``enqueued`` set is per seed — the
+two agree whenever no two seeds' listings link the same page URL.
+
 Retry semantics (R4, ``pygdpr/models/dpa/__init__.py:450-452``
 ``MaxRetriesError``): a missed URL re-enters pending with
 ``retry_count+1`` until ``max_attempts`` fetches have failed, then goes
@@ -65,6 +80,8 @@ import shutil
 import time
 from datetime import date
 
+import numpy as np
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -75,8 +92,8 @@ from . import seen as SN
 from . import urls
 from pyspark.sql import types as T
 
-from .extract import EXTRACT_OUT, LINK_BITS, MAX_LINK, make_fetch_extract
-from .tables import MorTable, SnapshotTable
+from .extract import EXTRACT_OUT, MAX_LINK, make_fetch_extract
+from .tables import MorTable, SnapshotTable, read_part
 
 # Scratch layout: EXTRACT_OUT plus row-local columns the sinks need —
 # text_len (slim consumers account payload bytes without decompressing
@@ -103,11 +120,11 @@ CATALOG = "CATALOG"
 
 
 def docs_from_extract_parts(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Documents-schema view of adopted ``sink=doc`` scratch parts.
-
-    Must stay value-identical to the projection the plain append path
-    writes: mixed manifests — plain parts from the post-fetch-keyed
-    documents append next to adopted parts — union to one frame."""
+    """Documents-schema view of adopted ``extract_v1`` parts: the round's
+    ``sink=doc`` extract partition and its post-fetch-keyed documents,
+    both written in the ``SCRATCH_FILE`` layout.  The round has no
+    plain-append path for documents; a plain part (one written through
+    ``SnapshotTable.append``) reads next to these as one frame."""
     df = spark.read.schema(SCRATCH_FILE).parquet(*paths)
     return df.select(
         F.col("final_key").alias("doc_hash"),
@@ -122,6 +139,23 @@ def docs_from_extract_parts(spark: SparkSession, paths: list[str]) -> DataFrame:
         "batch_id",
         "seq",
     )
+
+
+def first_by_seq(df: DataFrame, key: str) -> DataFrame:
+    """One row per ``key``: the one with the smallest ``seq`` — the
+    reference's first-enqueued rule — whatever the partitioning."""
+    rn = F.row_number().over(Window.partitionBy(key).orderBy("seq"))
+    return df.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
+
+
+def _shard_counts(add_dir: str) -> dict[int, int]:
+    """Per-shard counts of the first-attempt rows (``retry_count`` 0) of
+    a round-sized pending add part: a driver-side pyarrow read, bucketed
+    by ``seen.shard_of``'s ``pmod(url_hash, SHARDS)``."""
+    t = read_part(add_dir, ["url_hash", "retry_count"])
+    h = t["url_hash"].to_numpy()[t["retry_count"].to_numpy() == 0]
+    counts = np.bincount(np.mod(h, SN.SHARDS), minlength=SN.SHARDS)
+    return {pid: int(n) for pid, n in enumerate(counts) if n}
 
 
 class CrawlRun:
@@ -291,7 +325,7 @@ class CrawlRun:
         )
         self._commit_lineage(
             round_id=0, fetched=0, extracted=0,
-            delta_by_shard=self._shard_counts(seeded),
+            delta_by_shard=_shard_counts(seeded),
         )
 
     def last_committed_round(self) -> int | None:
@@ -350,30 +384,6 @@ class CrawlRun:
         threshold): the sum of the committed per-shard offsets."""
         return sum(n for _, n in self._catalog["offsets"]) if self._catalog else 0
 
-    def _shard_counts(self, df: DataFrame) -> dict[int, int]:
-        """Per-shard row counts of a round-sized delta (tiny collect)."""
-        return {
-            int(r["pid"]): int(r["n"])
-            for r in df.groupBy(
-                SN.shard_of(F.col("url_hash")).alias("pid")
-            )
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-
-    def _local_df(self, rows, schema) -> DataFrame:
-        """Single-partition DataFrame from driver-side rows.
-
-        ``createDataFrame(rows)`` lands on defaultParallelism partitions
-        (32 tiny files per commit), and ``.coalesce(1)`` on the Arrow
-        local relation costs ~4 s per write on Spark 4.1 (it defeats the
-        LocalTableScan fast path) — an explicit 1-slice parallelize is
-        both the fastest variant measured and one file per commit.
-        """
-        return self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), schema
-        )
-
     def _commit_lineage(
         self,
         round_id: int,
@@ -396,9 +406,12 @@ class CrawlRun:
             (round_id, *sids, pid, off, fetched, extracted)
             for pid, off in sorted(offsets.items())
         ] or [(round_id, *sids, 0, 0, fetched, extracted)]
-        # committed_ts (the last LINEAGE field) is stamped by Spark
-        df = self._local_df(
-            rows, T.StructType(S.LINEAGE.fields[:-1])
+        # committed_ts (the last LINEAGE field) is stamped by Spark.  One
+        # explicit slice writes one file, the fastest variant measured
+        # (``.coalesce(1)`` on an Arrow local relation costs ~4 s a write)
+        df = self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(rows, 1),
+            T.StructType(S.LINEAGE.fields[:-1]),
         ).withColumn("committed_ts", F.current_timestamp())
         self.lineage.append(df, note=f"round-{round_id}")
         catalog = {
@@ -535,9 +548,7 @@ class CrawlRun:
                 sched_all.withColumn("cost", F.lit(1).cast("long")), bud
             )
             sched_all = sched_all.drop("cost")
-        scheduled = sched_all.persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        scheduled = sched_all.persist(StorageLevel.MEMORY_AND_DISK)
         tick("plan_schedule")
         # count once: it both materializes the persist and gates the
         # broadcast hint (an unbounded round must degrade to a shuffle /
@@ -587,8 +598,8 @@ class CrawlRun:
         # of caching it: a round's payload (html/text/content) is far
         # bigger than executor memory at scale, and a deserialized cache
         # of it OOMs the heap.  Parquet scratch gives every downstream
-        # consumer (documents, seen, states, logs, metrics, expansion)
-        # COLUMN-PRUNED reads — the slim consumers never touch the
+        # consumer (the slim write's seen, state, log, metrics and
+        # expansion branches) COLUMN-PRUNED reads — they never touch the
         # payload columns at all (text_len carries their byte
         # accounting).  store_content=False is applied inside the UDF so
         # payload bytes never cross the Arrow boundary.
@@ -597,7 +608,7 @@ class CrawlRun:
         # exactly the rows the documents table will commit — BY RENAME
         # (adopt_part), not by reading the payload back and re-writing
         # it — and already carries their final keys and batch_id;
-        # ``sink=rest`` holds children/log rows for the slim consumers.
+        # ``sink=rest`` holds children/log rows for the slim write.
         # (The reference also writes each document's bytes exactly once,
         # pygdpr/models/dpa/austria/__init__.py:127-148.)
         out_raw = hits.mapInArrow(
@@ -617,8 +628,9 @@ class CrawlRun:
             F.when(is_doc_sink, F.lit("doc")).otherwise(F.lit("rest")).alias("sink"),
         )
         scratch = os.path.join(self.state_dir, "scratch", f"round-{round_id}")
-        enriched.write.partitionBy("sink").mode("overwrite").parquet(scratch)
-        out_hits = spark.read.schema(SCRATCH_OUT).parquet(scratch)
+        extract_dir = os.path.join(scratch, "extract")
+        enriched.write.partitionBy("sink").mode("overwrite").parquet(extract_dir)
+        out_hits = spark.read.schema(SCRATCH_OUT).parquet(extract_dir)
         tick("fetch_extract")
 
         # 4a. expansion: depth-0 listing children — URL-level dedupe
@@ -669,7 +681,7 @@ class CrawlRun:
                 )
             )
         url_children = SN.dedupe_against_seen(
-            url_kids.dropDuplicates(["url_hash"]),
+            first_by_seq(url_kids, "url_hash"),
             enqueued_urls,
             url_bits,
         )
@@ -691,7 +703,7 @@ class CrawlRun:
         #    docpage, files >1 get '#<link_idx>' keys (fixtures oracle).
         #    The ``sink=doc`` scratch partition IS this set, final keys
         #    included — the table adopts its files by rename after the
-        #    commit window below (no payload read-back, no re-write).
+        #    slim write below (no payload read-back, no re-write).
         # post-fetch-keyed docs (slovenia): the title — and therefore the
         # X1 md5 key — only exists after the docpage fetch
         # (slovenia/__init__.py:179-189).  Key now, then admit: first
@@ -700,44 +712,24 @@ class CrawlRun:
         # repeated-folder overwrite collapsed to first-wins; prior runs =
         # P3 existing_docs) are skipped.  Probe-shaped anti-join: seen is
         # scanned, never shuffled.  The whole subplan (window + probe,
-        # re-evaluated inside both the documents and seen writes) is
+        # feeding both the seen and the doc branch of the slim write) is
         # built only when a seeded authority actually defers keying to
         # the docpage — only such profiles emit keyless titled doc rows.
         post = None
         if self._has_postfetch():
-            w_post = Window.partitionBy("doc_hash").orderBy("seq")
-            post = (
+            post = first_by_seq(
                 out_hits.filter(
                     (F.col("out_kind") == "doc")
                     & F.col("doc_hash").isNull()
                     & F.col("title").isNotNull()
                 )
                 .withColumn("raw_hash", F.md5(F.encode(F.col("title"), "UTF-8")))
-                .withColumn("doc_hash", F.col("raw_hash"))
-                .withColumn("__rn", F.row_number().over(w_post))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
+                .withColumn("doc_hash", F.col("raw_hash")),
+                "doc_hash",
             )
             post = SN.anti_join_probe(
                 post, self.seen.read(spark).select("doc_hash"), "doc_hash"
             ).withColumn("final_key", F.col("doc_hash"))
-        post_doc_rows = (
-            post.select(
-                F.col("final_key").alias("doc_hash"),
-                "authority",
-                "doc_type",
-                "url",
-                F.create_map(F.col("lang"), F.col("title")).alias("title"),
-                "release_date",
-                "lang",
-                "content",
-                "text",
-                F.lit(round_id).cast("long").alias("batch_id"),
-                "seq",
-            )
-            if post is not None
-            else None
-        )
 
         # 6. seen delta: every depth-1 docpage fetched OK registers its
         #    final key (oracle: run_final_keys.add after docpage fetch);
@@ -770,23 +762,22 @@ class CrawlRun:
         #    attempts left (R4) — re-enters pending with retry_count+1.
         #    Misses (P7) fall out of the left join for free: a scheduled
         #    url with no doc/log row in the round output was absent from
-        #    pages — no anti-join, no synthesized rows.  sched_out is
-        #    round-sized and slim; persisting it lets the done/log/
-        #    re-pend/metrics consumers share ONE scratch scan + shuffle.
-        attempt_status = (
-            out_hits.filter(F.col("out_kind") != "child")
-            .select(
+        #    pages — no anti-join, no synthesized rows.  The done/log/
+        #    re-pend/metrics branches all land in the one slim write
+        #    below, so they share one broadcast of attempt_status (one
+        #    plan, one reused exchange) with nothing persisted.
+        attempt_status = first_by_seq(
+            out_hits.filter(F.col("out_kind") != "child").select(
                 urls.url_hash(F.col("url")).alias("url_hash"),
                 "status",
                 F.col("text_len").alias("bytes"),
-            )
-            .dropDuplicates(["url_hash"])
-        )
-        sched_out = (
-            scheduled.join(F.broadcast(attempt_status), "url_hash", "left")
-            .withColumn("status", F.coalesce(F.col("status"), F.lit("miss")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+                "seq",
+            ),
+            "url_hash",
+        ).drop("seq")
+        sched_out = scheduled.join(
+            F.broadcast(attempt_status), "url_hash", "left"
+        ).withColumn("status", F.coalesce(F.col("status"), F.lit("miss")))
         fr_cols = [f.name for f in S.FRONTIER.fields]
 
         def _with_state(df: DataFrame, state: str) -> DataFrame:
@@ -829,127 +820,104 @@ class CrawlRun:
             "bytes",
         )
 
-        # -- stats ------------------------------------------------------------
-        # n_docs comes from the metrics aggregation and the seen-delta
-        # size from the seen part's footer row count (both below — no
-        # separate count job over the heavy round output)
-
         # per-authority metrics = hits aggregation (expanded/doc/bytes
         # from one column-pruned scratch scan) merged with the miss
-        # counts from the persisted sched_out — no union plan, no second
-        # heavy scan
+        # counts of the scheduled rows — no union plan, no second heavy
+        # scan
+        kind = F.col("out_kind")
+        count_if = lambda cond: F.sum(F.when(cond, 1).otherwise(0))
         hit_agg = out_hits.groupBy("authority").agg(
-            F.sum(F.when(F.col("out_kind") == "child", 1).otherwise(0)).alias(
-                "expanded"
-            ),
-            F.sum(F.when(F.col("out_kind") == "doc", 1).otherwise(0)).alias(
-                "fetched"
-            ),
-            F.sum(
-                F.when(
-                    (F.col("out_kind") != "child") & (F.col("status") != "ok"), 1
-                ).otherwise(0)
-            ).alias("failed_hits"),
-            F.sum(
-                F.when(F.col("out_kind").isin("doc", "log"), 1).otherwise(0)
-            ).alias("sched_hits"),
-            F.sum(
-                F.when(F.col("text_len").isNotNull(), F.col("text_len")).otherwise(0)
-            ).alias("bytes_extracted"),
+            count_if(kind == "child").alias("expanded"),
+            count_if(kind == "doc").alias("fetched"),
+            count_if((kind != "child") & (F.col("status") != "ok")).alias("failed_hits"),
+            count_if(kind.isin("doc", "log")).alias("sched_hits"),
+            F.sum(F.coalesce(F.col("text_len"), F.lit(0))).alias("bytes_extracted"),
         )
         miss_agg = (
             sched_out.filter(F.col("status") == "miss")
             .groupBy("authority")
             .agg(F.count("*").alias("n_miss"))
         )
+        # (the metrics projection below casts every column to its type)
         met = (
             hit_agg.join(miss_agg, "authority", "full_outer")
             .na.fill({"expanded": 0, "fetched": 0, "failed_hits": 0,
                       "sched_hits": 0, "bytes_extracted": 0, "n_miss": 0})
             .select(
-                F.lit(round_id).cast("long").alias("round_id"),
+                F.lit(round_id).alias("round_id"),
                 "authority",
                 F.lit("*").alias("host"),
-                F.col("expanded").cast("long"),
-                F.lit(0).cast("long").alias("deduped"),
-                (F.col("sched_hits") + F.col("n_miss")).cast("long").alias(
-                    "scheduled"
-                ),
-                F.col("fetched").cast("long"),
-                (F.col("failed_hits") + F.col("n_miss")).cast("long").alias(
-                    "failed"
-                ),
-                F.col("bytes_extracted").cast("long"),
-                F.lit(int((time.time() - t0) * 1000)).cast("long").alias("wall_ms"),
+                "expanded",
+                F.lit(0).alias("deduped"),
+                (F.col("sched_hits") + F.col("n_miss")).alias("scheduled"),
+                "fetched",
+                (F.col("failed_hits") + F.col("n_miss")).alias("failed"),
+                "bytes_extracted",
+                F.lit(int((time.time() - t0) * 1000)).alias("wall_ms"),
             )
         )
 
-        # -- commits (the catalog write last = commit point) ------------------
-        # The five data-table writes have independent DAGs (all rooted in
-        # the materialized scratch + the persisted scheduled/flagged/
-        # sched_out frames), so they run as CONCURRENT Spark jobs — round
-        # wall pays max(write) instead of sum(write).  Each only stages a
-        # snapshot of its own table; the round becomes visible at the
-        # catalog write, strictly last on the driver thread.
-        from concurrent.futures import ThreadPoolExecutor
-
-        note = f"round-{round_id}"
+        # 8. ONE slim write: every round table's part in its declared
+        #    schema (pending's stamped with its next commit's seq), unioned
+        #    over a superset of columns — no column name has two types —
+        #    and partitioned by sink.  A schema'd scan takes only its own
+        #    columns, so each ``sink=<table>`` directory IS that table's
+        #    part; post-fetch docs keep the ``extract_v1`` scratch layout.
+        seq = self.pending.next_seq()
+        sinks = {
+            "seen": self.seen.project(seen_delta),
+            "fetch_log": self.fetch_log.project(log_rows),
+            "done": self.done.project(done_delta),
+            "pending_add": self.pending.stamp(adds, seq),
+            "pending_del": self.pending.stamp(tombstones, seq, tomb=True),
+            "metrics": self.metrics.project(met),
+        }
+        if post is not None:
+            sinks["doc"] = self.documents.project(post, SCRATCH_FILE)
+        slim = None
+        for sink, df in sinks.items():
+            df = df.withColumn("sink", F.lit(sink))
+            slim = df if slim is None else slim.unionByName(df, allowMissingColumns=True)
+        slim_dir = os.path.join(scratch, "slim")
         tick("plan_outputs")
         try:
-            with ThreadPoolExecutor(max_workers=8) as ex:
-                # the metrics aggregation doubles as the round's doc
-                # count — one job, collected concurrently with the writes
-                f_met = ex.submit(met.collect)
-                # documents: only the (rare) post-fetch-keyed rows need a
-                # real write — the bulk doc payload is adopted from the
-                # scratch partition by rename once every consumer of the
-                # scratch files has finished scanning them (below)
-                f_docs = (
-                    ex.submit(self.documents.append, post_doc_rows, note)
-                    if post_doc_rows is not None
-                    else None
+            slim.write.partitionBy("sink").mode("overwrite").parquet(slim_dir)
+
+            # adoption: driver-side renames + manifest appends, after every
+            # job scanning the scratch has completed.  A sink with no rows
+            # has no partition, and its table stages no snapshot.
+            part = {
+                d[len("sink="):]: os.path.join(slim_dir, d)
+                for d in os.listdir(slim_dir)
+                if d.startswith("sink=")
+            }
+            note = f"round-{round_id}"
+            adopted = {}
+            for name in ("seen", "fetch_log", "done", "metrics"):
+                if name in part:
+                    table = getattr(self, name)
+                    table.adopt_part(part[name], note)
+                    adopted[name] = table.last_part()
+            add_dir = None
+            if "pending_add" in part or "pending_del" in part:
+                add_dir = self.pending.commit_delta(
+                    spark, part.get("pending_add"), part.get("pending_del"), note
                 )
-                f_seen = ex.submit(self.seen.append, seen_delta, note)
-                f_log = ex.submit(self.fetch_log.append, log_rows, note)
-                f_pend = ex.submit(
-                    self.pending.commit_delta, spark, adds, tombstones, note
-                )
-                f_done = ex.submit(self.done.append, done_delta, note)
-                met_rows = f_met.result()
-                n_docs = int(sum(r["fetched"] for r in met_rows))
-                # metrics write + per-shard add counts join the same
-                # concurrent window as soon as their inputs exist —
-                # lineage alone stays strictly last
-                f_metrics = ex.submit(
-                    self.metrics.append, self._local_df(met_rows, S.METRICS), note
-                )
-                add_read = f_pend.result()
-                f_shards = ex.submit(
-                    self._shard_counts,
-                    add_read.filter(F.col("retry_count") == 0),
-                )
-                if f_docs is not None:
-                    f_docs.result()
-                f_seen.result()
-                f_log.result()
-                f_done.result()
-                delta_by_shard = f_shards.result()
-                f_metrics.result()
-            n_new = sum(delta_by_shard.values())
-            # adopt the round's doc payload into the documents table by
-            # RENAME — driver-side metadata only (footer row counts +
-            # manifest append).  Strictly after the commit window: every
-            # Spark job scanning the scratch files has completed, so no
-            # task can race the rename; strictly before lineage and the
-            # catalog, which record the documents snapshot id.  A zero-doc round
-            # writes no ``sink=doc`` partition — nothing to adopt.
-            doc_part_dir = os.path.join(scratch, "sink=doc")
-            if os.path.isdir(doc_part_dir):
-                self.documents.adopt_part(doc_part_dir, note, "extract_v1")
+            # documents: the post-fetch-keyed rows, then the round's doc
+            # payload from the extract scratch (a zero-doc round writes
+            # neither partition)
+            for d in (part.get("doc"), os.path.join(extract_dir, "sink=doc")):
+                if d and os.path.isdir(d):
+                    self.documents.adopt_part(d, note, "extract_v1")
+            delta_by_shard = _shard_counts(add_dir) if add_dir else {}
+            n_docs = 0
+            if "metrics" in adopted:
+                met_dir = self.metrics.part_dir(adopted["metrics"])
+                n_docs = pc.sum(read_part(met_dir, ["fetched"])["fetched"]).as_py()
             tick("commits")
-            if bloom_active:
+            if bloom_active and add_dir:
                 self._bloom_commit(
-                    delta=add_read.select("url_hash"),
+                    delta=spark.read.schema(S.FRONTIER).parquet(add_dir).select("url_hash"),
                     full=self.frontier_view().select("url_hash"),
                     note=note,
                     est_new_per_shard=max(delta_by_shard.values(), default=0) + 1,
@@ -965,18 +933,16 @@ class CrawlRun:
             scheduled.unpersist()
             flagged.unpersist()
             pending_slim.unpersist()
-            sched_out.unpersist()
             shutil.rmtree(scratch, ignore_errors=True)
-        st = {
+        return {
             "round": round_id,
             "scheduled": n_sched,
             "docs": n_docs,
-            "new_frontier_rows": n_new,
-            "seen_delta": self.seen.last_append_rows,
+            "new_frontier_rows": sum(delta_by_shard.values()),
+            "seen_delta": adopted["seen"]["rows"] if "seen" in adopted else 0,
             "wall_s": time.time() - t0,
             "phases": phases,
         }
-        return st
 
     def _to_frontier_rows(self, df: DataFrame, keep_keys: bool = False) -> DataFrame:
         return df.select(

@@ -49,10 +49,10 @@ def get_spark(
         # broadcast dims (authorities, robots, seeds) freely; the big
         # frontier x pages join is left to sort-merge / AQE.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # the round's one payload write is dynamically partitioned by
-        # sink (doc|rest); concurrent writers keep it sort-free — the
-        # fallback path would locally re-sort ~12 KB payload rows by the
-        # partition key, pure memory traffic on the round's hot stage
+        # a round's writes are partitioned by sink: concurrent writers keep
+        # the payload write (doc|rest) sort-free — the fallback re-sorts
+        # ~12 KB payload rows by the key on the hot stage — and each slim
+        # write task is one union branch, so it writes a single sink
         .config("spark.sql.maxConcurrentOutputFileWriters", "4")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -5,10 +5,13 @@ time-travel.  The sandbox has no iceberg-spark-runtime jar, so this module
 implements the same *discipline* over plain parquet: every write lands an
 immutable data directory plus an immutable manifest JSON listing the
 directories that make up the new snapshot, and moves the table's
-in-memory ``head`` to it.  Readers resolve a snapshot (the head or one by
-id) to a list of parquet paths and hand them to ``spark.read.parquet`` —
-so predicate pushdown, column pruning and partition-parallel scans all
-still apply.
+in-memory ``head`` to it.  A part is written by the table (projected to
+the declared schema) or adopted by RENAME from a directory an upstream
+write produced (``adopt_part``, Iceberg's ``add_files``) — the way
+``rounds.CrawlRun`` stages every round table's part.  Readers resolve a
+snapshot (the head or one by id) to a list of parquet paths and hand
+them to ``spark.read.parquet`` — so predicate pushdown, column pruning
+and partition-parallel scans all still apply.
 
 A write only *stages* its snapshot: nothing on disk points at it until
 the owner commits.  ``rounds.CrawlRun`` commits all of its tables at once
@@ -41,15 +44,27 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # the manifest of a table with no snapshot: the first commit gets seq 0
 _EMPTY = {"seq": -1, "parts": [], "delete_parts": []}
+
+
+def _part_files(part_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
+
+
+def read_part(part_dir: str, columns: list[str]) -> pa.Table:
+    """``columns`` of a round-sized part, read on the driver (no job)."""
+    return pa.concat_tables([pq.read_table(f, columns=columns) for f in _part_files(part_dir)])
 
 
 class SnapshotTable:
@@ -109,33 +124,36 @@ class SnapshotTable:
         self.head = snapshot_id
         return snapshot_id
 
+    def next_seq(self) -> int:
+        """Sequence number the next staged snapshot gets."""
+        return self._manifest()["seq"] + 1
+
     # -- writes ---------------------------------------------------------------
 
-    def _write_part(self, df: DataFrame, schema: T.StructType | None = None) -> str:
-        part = os.path.join("data", uuid.uuid4().hex)
-        # enforce the declared schema (name + type) at the boundary
+    def project(self, df: DataFrame, schema: T.StructType | None = None) -> DataFrame:
+        """``df`` in the declared schema (name + type; default the table's):
+        the boundary check every part passes, written here or adopted.  One
+        SQL select is one call into the JVM where column objects cost
+        several per column (~0.2 s a round on a cold JVM)."""
+        cast = "CAST(`{0}` AS {1}) AS `{0}`"
         sch = schema if schema is not None else self.schema
-        cols = [df[f.name].cast(f.dataType).alias(f.name) for f in sch.fields]
-        df.select(*cols).write.mode("overwrite").parquet(os.path.join(self.root, part))
+        return df.selectExpr(*[cast.format(f.name, f.dataType.simpleString()) for f in sch.fields])
+
+    def _write_part(self, df: DataFrame) -> str:
+        """Write an already-projected frame as a new part directory."""
+        part = os.path.join("data", uuid.uuid4().hex)
+        df.write.mode("overwrite").parquet(os.path.join(self.root, part))
         return part
 
     def _part_rows(self, part: str) -> int:
         """Exact row count of a written part from the parquet footers —
         driver-side metadata reads, no Spark job (the manifest statistic
         Iceberg keeps natively)."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.read_metadata(f).num_rows
-            for f in glob.glob(os.path.join(self.root, part, "*.parquet"))
-        )
+        files = _part_files(os.path.join(self.root, part))
+        return sum(pq.read_metadata(f).num_rows for f in files)
 
     def _new_entry(self, part: str, seq: int) -> dict:
-        entry = {"path": part, "seq": seq, "rows": self._part_rows(part)}
-        # rows of the most recent part written — free manifest statistic
-        # for callers that need delta sizes without a count job
-        self.last_append_rows = entry["rows"]
-        return entry
+        return {"path": part, "seq": seq, "rows": self._part_rows(part)}
 
     def _add_part(self, part: str, note: str, layout: str | None = None) -> str:
         m = self._manifest()
@@ -146,48 +164,58 @@ class SnapshotTable:
         return self._commit(seq, m["parts"] + [entry], note)
 
     def append(self, df: DataFrame, note: str = "append") -> str:
-        return self._add_part(self._write_part(df), note)
+        return self._add_part(self._write_part(self.project(df)), note)
 
     def append_read(self, spark: SparkSession, df: DataFrame, note: str = "append"):
         """Append ``df`` and return (snapshot_id, re-read of the part just
         written).  The re-read is a plain parquet scan of the delta —
         a caller that needs the delta again reuses the materialized
         bytes instead of recomputing the delta's whole upstream DAG."""
-        new_part = self._write_part(df)
+        new_part = self._write_part(self.project(df))
         sid = self._add_part(new_part, note)
         return sid, spark.read.schema(self.schema).parquet(
             os.path.join(self.root, new_part)
         )
 
     def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
-        seq = self._manifest()["seq"] + 1
-        return self._commit(seq, [self._new_entry(self._write_part(df), seq)], note)
+        seq = self.next_seq()
+        part = self._write_part(self.project(df))
+        return self._commit(seq, [self._new_entry(part, seq)], note)
 
-    def adopt_part(self, src_dir: str, note: str, layout: str) -> str:
-        """Commit an already-materialized parquet directory as a new part
-        by RENAME — zero data movement (Iceberg's ``add_files`` shape).
-
-        The files keep the layout their producer wrote (``layout`` tags
-        the manifest entry); ``read()`` maps them into the table schema
-        through the registered ``layout_readers[layout]`` projection.
-        This is what lets the round's one heavy payload write double as
-        the documents part instead of being read back, decompressed and
-        re-written (the reference writes each document's files exactly
-        once too — pygdpr/models/dpa/austria/__init__.py:127-148)."""
-        import shutil
-
+    def _adopt(self, src_dir: str) -> str:
+        """Move an already-written parquet directory under ``data/``."""
         part = os.path.join("data", uuid.uuid4().hex)
         dst = os.path.join(self.root, part)
         try:
             os.rename(src_dir, dst)
         except OSError:  # cross-device state layouts: fall back to copy
             shutil.move(src_dir, dst)
-        return self._add_part(part, note, layout)
+        return part
+
+    def adopt_part(self, src_dir: str, note: str, layout: str | None = None) -> str:
+        """Commit an already-materialized parquet directory as a new part
+        by RENAME — zero data movement (Iceberg's ``add_files`` shape).
+
+        With ``layout=None`` the files hold the table's columns (extra
+        columns are ignored by the schema'd scan); otherwise ``read()``
+        maps them into the table schema through the registered
+        ``layout_readers[layout]`` projection.  This lets the round's two
+        writes double as every table's parts instead of being read back
+        and re-written (the reference writes each document's files
+        exactly once too — pygdpr/models/dpa/austria/__init__.py:127-148)."""
+        return self._add_part(self._adopt(src_dir), note, layout)
+
+    def last_part(self) -> dict:
+        """The head manifest's most recently added part entry."""
+        return self._manifest()["parts"][-1]
+
+    def part_dir(self, entry: dict) -> str:
+        return os.path.join(self.root, entry["path"])
 
     # -- reads ----------------------------------------------------------------
 
     def _paths(self, parts: list) -> list[str]:
-        return [os.path.join(self.root, e["path"]) for e in parts]
+        return [self.part_dir(e) for e in parts]
 
     def read(self, spark: SparkSession, snapshot_id: str | None = None) -> DataFrame:
         """Read latest snapshot, or time-travel to ``snapshot_id``."""
@@ -273,14 +301,18 @@ class MorTable(SnapshotTable):
             list(self.delete_schema.fields) + [T.StructField("__tseq", T.LongType())]
         )
 
-    def _seq_entry(self, df: DataFrame, seq: int, tomb: bool = False) -> dict:
-        """Write ``df`` as an add (or tombstone) part stamped with commit
-        sequence ``seq`` in its ``__seq`` (``__tseq``) column."""
+    def stamp(self, df: DataFrame, seq: int, tomb: bool = False) -> DataFrame:
+        """``df`` as an add (or tombstone) part of commit ``seq``: projected
+        to the part schema with ``__seq`` (``__tseq``) set to ``seq``."""
         col, sch = ("__tseq", self._del_schema()) if tomb else ("__seq", self._add_schema())
-        return self._new_entry(
-            self._write_part(df.withColumn(col, F.lit(seq).cast("long")), schema=sch),
-            seq,
-        )
+        return self.project(df.withColumn(col, F.lit(seq).cast("long")), sch)
+
+    def _seq_entry(self, src: DataFrame | str, seq: int, tomb: bool = False) -> dict:
+        """An add (tombstone) part of commit ``seq``: a frame is stamped and
+        written, a directory written as ``stamp(df, seq, tomb)`` adopted."""
+        if isinstance(src, str):
+            return self._new_entry(self._adopt(src), seq)
+        return self._new_entry(self._write_part(self.stamp(src, seq, tomb)), seq)
 
     def _read_from(
         self, spark: SparkSession, parts: list, delete_parts: list
@@ -312,19 +344,21 @@ class MorTable(SnapshotTable):
     def overwrite(self, df: DataFrame, note: str = "overwrite") -> str:
         """Replace the table with ``df`` as one base part — the
         compaction writer's shape, so every part keeps ``__seq``."""
-        seq = self._manifest()["seq"] + 1
+        seq = self.next_seq()
         return self._commit(seq, [self._seq_entry(df, seq)], note)
 
     def commit_delta(
         self,
         spark: SparkSession,
-        adds: DataFrame | None = None,
-        deletes: DataFrame | None = None,
+        adds: DataFrame | str | None = None,
+        deletes: DataFrame | str | None = None,
         note: str = "delta",
-    ) -> DataFrame | None:
-        """One snapshot commit of (adds, tombstones); returns a re-read
-        of the add part just written (None if no adds) so callers can
-        reuse the materialized delta without recomputing its DAG."""
+    ) -> str | None:
+        """One snapshot commit of (adds, tombstones), each a frame to write
+        or a directory written as ``stamp(df, next_seq(), tomb)`` to adopt
+        by rename.  Returns the add part's directory (None if no adds) —
+        it stays on disk even when this commit compacts it away, so
+        callers can read the round-sized delta back."""
         m = self._manifest()
         parts, dels = list(m["parts"]), list(m["delete_parts"])
         seq = m["seq"] + 1  # this commit's sequence number
@@ -346,9 +380,7 @@ class MorTable(SnapshotTable):
             dels = []
             note += "+compact"
         self._commit(seq, parts, note, delete_parts=dels)
-        if add is None:
-            return None
-        return spark.read.schema(self.schema).parquet(*self._paths([add]))
+        return None if add is None else self.part_dir(add)
 
     def base_parts(self) -> list[str]:
         """Current data part paths (introspection for O(round) tests)."""

@@ -1,16 +1,19 @@
-"""Adopted-part commits: the documents table takes the round's
-``sink=doc`` scratch partition by RENAME (tables.adopt_part) instead of
-reading the payload back and re-writing it — the round's one heavy
-write doubles as the table part (Iceberg's add_files shape).
+"""Adopted-part commits: a round writes twice — the extract scratch and
+one slim write partitioned by sink — and every round table takes its
+part from one of those writes by RENAME (tables.adopt_part) instead of
+a write of its own (Iceberg's add_files shape).  The documents table
+adopts the ``sink=doc`` extract partition (and the post-fetch-keyed
+documents, written in the same layout), so the payload is never read
+back and re-written.
 
 The reference writes each document's bytes exactly once too
 (pygdpr/models/dpa/austria/__init__.py:127-148); byte-identity of the
 adopted rows against the sequential oracle is enforced by the e2e
-suites — this file pins the *mechanics*: layout-tagged manifest
-entries, one multi-path scan per layout, time travel across adopted
-snapshots, and mixed plain+adopted manifests (plain parts come only from
-direct appends, such as the post-fetch-keyed documents) reading as one
-frame.
+suites — this file pins the *mechanics*: one slim write per round and
+no other table write than lineage, layout-tagged manifest entries, one
+multi-path scan per layout, time travel across adopted snapshots, and
+mixed plain+adopted manifests (plain parts come only from direct
+appends outside the round) reading as one frame.
 """
 
 import os
@@ -19,6 +22,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.fixtures import AS_OF, fixture_dir
 from crawler_spark.rounds import CrawlRun
+from crawler_spark.tables import SnapshotTable
 
 
 def _mk(spark, state_dir):
@@ -41,13 +45,13 @@ def test_documents_parts_are_adopted_not_rewritten(spark, tmp_path):
     parts = run.documents._read_manifest(sid)["parts"]
     adopted = [p for p in parts if p.get("layout")]
     assert adopted, "doc rounds should commit adopted scratch partitions"
+    # the round has no plain documents write: the post-fetch-keyed docs
+    # (slovenia) are adopted in the extract layout too
+    assert adopted == parts
     assert all(p["layout"] == "extract_v1" for p in adopted)
-    # manifest row statistics survive adoption (footer counts); the
-    # post-fetch-keyed docs (slovenia) are the only plain-part rows
+    # manifest row statistics survive adoption (footer counts)
     n = run.documents.read(spark).count()
-    plain_rows = sum(p["rows"] for p in parts if not p.get("layout"))
-    assert sum(p["rows"] for p in adopted) + plain_rows == n > 0
-    assert sum(p["rows"] for p in adopted) > plain_rows
+    assert sum(p["rows"] for p in adopted) == n > 0
     # adopted files live under the table root (renamed, not referenced
     # in the deleted scratch dir) and keep their producer's layout
     for p in adopted:
@@ -79,8 +83,7 @@ def test_mixed_plain_and_adopted_manifest(spark, tmp_path):
         (r["doc_hash"], r["url"], r["batch_id"])
         for r in docs.select("doc_hash", "url", "batch_id").collect()
     )
-    # a plain append (documents schema) lands next to adopted parts —
-    # the shape the post-fetch-keyed documents append produces
+    # a plain append (documents schema) lands next to adopted parts
     extra = docs.limit(2).withColumn("doc_hash", F.concat(F.lit("x-"), "doc_hash"))
     run.documents.append(extra, note="plain-next-to-adopted")
     after = run.documents.read(spark)
@@ -95,3 +98,76 @@ def test_mixed_plain_and_adopted_manifest(spark, tmp_path):
         .collect()
     )
     assert again == before
+
+
+SLIM_TABLES = ("seen", "fetch_log", "done", "metrics")
+
+
+def test_round_stages_every_part_from_one_slim_write(spark, tmp_path, monkeypatch):
+    """During a round, ``_write_part`` runs only for the lineage append
+    (no Bloom is active and no compaction fires here); every seen,
+    fetch_log, done, metrics and pending part of the round is a renamed
+    ``sink=<table>`` partition of the round's one slim write, and the
+    round's ``seen_delta`` is its seen part's row count (0 with none)."""
+    state = str(tmp_path / "slim")
+    run = _mk(spark, state)
+    run.init()
+    writes, adopts = [], {}
+    orig_write, orig_adopt = SnapshotTable._write_part, SnapshotTable._adopt
+
+    def write_part(self, df):
+        writes.append(os.path.basename(self.root))
+        return orig_write(self, df)
+
+    def adopt(self, src):
+        part = orig_adopt(self, src)
+        adopts[(os.path.basename(self.root), part)] = src
+        return part
+
+    monkeypatch.setattr(SnapshotTable, "_write_part", write_part)
+    monkeypatch.setattr(SnapshotTable, "_adopt", adopt)
+
+    def parts(table, key="parts"):
+        return {e["path"]: e for e in table._manifest()[key]}
+
+    post_docs = no_seen = 0
+    for r in range(1, 50):
+        before = {t: parts(getattr(run, t)) for t in SLIM_TABLES}
+        before["pending"] = parts(run.pending)
+        before["tombstones"] = parts(run.pending, "delete_parts")
+        writes.clear()
+        adopts.clear()
+        st = run.round(r)
+        if st is None:
+            break
+        assert writes == ["lineage"], (r, writes)
+        slim = os.path.join(state, "scratch", f"round-{r}", "slim")
+        new = {t: {p: e for p, e in parts(getattr(run, t)).items() if p not in before[t]}
+               for t in SLIM_TABLES}
+        new["pending"] = {p: e for p, e in parts(run.pending).items()
+                          if p not in before["pending"]}
+        new["tombstones"] = {p: e for p, e in parts(run.pending, "delete_parts").items()
+                             if p not in before["tombstones"]}
+        sinks = dict(zip(SLIM_TABLES, SLIM_TABLES), pending="pending_add",
+                     tombstones="pending_del")
+        dirs = {"pending": "frontier", "tombstones": "frontier"}
+        for t, sink in sinks.items():
+            assert len(new[t]) <= 1, (r, t, new[t])
+            for p in new[t]:
+                assert adopts[(dirs.get(t, t), p)] == os.path.join(slim, f"sink={sink}")
+        assert st["seen_delta"] == sum(e["rows"] for e in new["seen"].values())
+        # a round with no seen partition reports 0 (round 1 fetches
+        # listings only) and stages no seen snapshot
+        no_seen += not new["seen"]
+        assert new["metrics"] and new["fetch_log"]
+        # documents: the extract's sink=doc partition, plus the
+        # post-fetch-keyed docs from the slim write
+        for (t, p), src in adopts.items():
+            if t == "documents":
+                assert src in (os.path.join(slim, "sink=doc"),
+                               os.path.join(state, "scratch", f"round-{r}",
+                                            "extract", "sink=doc"))
+                post_docs += src.startswith(slim)
+    assert r > 2
+    assert post_docs, "the fixture's post-fetch-keyed docs were adopted"
+    assert no_seen

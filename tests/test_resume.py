@@ -4,11 +4,14 @@ the same state dir, final state identical to an uninterrupted run
 
 The reference loses its whole run delta on crash (seen-set flushed only
 at end, gdprCrawler.py:292-301); the engine's per-round catalog commit
-makes any crash replay idempotent.  The crash-point cases raise right
-after each staged write of round 3 (or just before its lineage row, or
-after the lineage append but before the catalog write, or inside
-``init()``) and require all six round tables — row counts included — to
-come out equal to an uninterrupted run.  Each case restarts two ways:
+makes any crash replay idempotent.  The crash-point cases raise in
+round 3 after its one slim write but before any table adopts its part,
+right after each table stages its part (by rename from that write, or
+the URL Bloom / lineage write), between pending's add and tombstone
+renames, just before its lineage row, after the lineage append but
+before the catalog write, or inside ``init()`` — and require all six
+round tables, row counts included, to come out equal to an
+uninterrupted run.  Each case restarts two ways:
 ``resume()`` then rounds, and a plain ``run()`` (what the bench and the
 spark-submit driver call).  Opening and resuming the state dir touch no
 file under any table directory, and every table's manifest chain from
@@ -171,34 +174,44 @@ def test_resume_after_partial_commit(spark, tmp_path, uninterrupted):
     assert _final_state(resumed) == uninterrupted
 
 
+# (id, table attribute or None for the CrawlRun, method, CrawlRun
+# options, crash before the call instead of after it), in the order
+# round 3 makes the calls.  A round table's part joins it by
+# ``adopt_part`` (pending: ``commit_delta`` of two adopted parts); the
+# ``after_<table>_append`` ids name that snapshot operation (Iceberg's
+# ``append``), whichever method performs it.
 CRASH_POINTS = [
-    ("after_pending_commit_delta", "pending", "commit_delta", {}),
-    ("after_fetch_log_append", "fetch_log", "append", {}),
-    ("after_metrics_append", "metrics", "append", {}),
-    ("after_documents_adopt_part", "documents", "adopt_part", {}),
-    ("before_commit_lineage", None, "_commit_lineage", {}),
-    ("after_seen_append", "seen", "append", {}),
-    ("after_done_append", "done", "append", {}),
+    # the slim write has landed, no table has adopted its partition
+    ("after_slim_write", "seen", "adopt_part", {}, True),
+    ("after_seen_append", "seen", "adopt_part", {}, False),
+    ("after_fetch_log_append", "fetch_log", "adopt_part", {}, False),
+    ("after_done_append", "done", "adopt_part", {}, False),
+    ("after_metrics_append", "metrics", "adopt_part", {}, False),
+    # pending has renamed its add part, not its tombstone part
+    ("mid_pending_commit_delta", "pending", "_adopt", {}, False),
+    ("after_pending_commit_delta", "pending", "commit_delta", {}, False),
+    ("after_documents_adopt_part", "documents", "adopt_part", {}, False),
     # the Bloom path on: the crashed round staged a Bloom holding its
     # adds, which the replay must not read
-    ("after_url_bloom_overwrite", "url_bloom", "overwrite", {"bloom_min_rows": 0}),
+    ("after_url_bloom_overwrite", "url_bloom", "overwrite", {"bloom_min_rows": 0}, False),
+    ("before_commit_lineage", None, "_commit_lineage", {}, True),
     # the lineage part is staged, the catalog is not written
-    ("after_lineage_append", "lineage", "append", {}),
+    ("after_lineage_append", "lineage", "append", {}, False),
 ]
 
 
 # the resume() restart keeps the bare crash-point id; run() adds "-run"
 @pytest.mark.parametrize(
-    "table,method,kw,restart",
+    "table,method,kw,before,restart",
     [
-        pytest.param(table, method, kw, restart,
+        pytest.param(table, method, kw, before, restart,
                      id=name if restart == "resume" else f"{name}-{restart}")
-        for name, table, method, kw in CRASH_POINTS
+        for name, table, method, kw, before in CRASH_POINTS
         for restart in RESTARTS
     ],
 )
 def test_crash_point_resumes_to_uninterrupted_state(
-    spark, tmp_path, monkeypatch, uninterrupted, table, method, kw, restart
+    spark, tmp_path, monkeypatch, uninterrupted, table, method, kw, before, restart
 ):
     state = str(tmp_path / "crash")
     run = _mk(spark, state, **kw)
@@ -206,13 +219,13 @@ def test_crash_point_resumes_to_uninterrupted_state(
     for r in range(1, CRASH_ROUND):
         run.round(r)
 
-    # the write at the crash point lands (table methods), or the round
-    # dies just before its lineage row — either way no catalog commit
+    # the round dies just before or just after the call — either way
+    # no catalog commit
     target = run if table is None else getattr(run, table)
     orig = getattr(target, method)
 
     def crashing(*args, **kwargs):
-        if table is not None:
+        if not before:
             orig(*args, **kwargs)
         raise Crash(method)
 
