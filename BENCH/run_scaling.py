@@ -46,7 +46,8 @@ STATE_ROOT = "/dev/shm" if SHM else None
 # -Xms pre-commits the heap: without it the first multi-GB stage pays
 # tens of seconds of heap growth + kernel page-zeroing INSIDE the
 # measured region (observed as 50-80% sys CPU), which is JVM startup
-# cost, not engine throughput.
+# cost, not engine throughput.  The heap follows the machine's physical
+# memory (driver_heap_mb), so the driver starts on any box.
 spark = get_spark(f"scaling{{cpus}}", master=f"local[{{cpus}}]",
                   shuffle_partitions=max(2 * cpus, 2),
                   extra_conf={{"spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
@@ -66,9 +67,9 @@ spark = get_spark(f"scaling{{cpus}}", master=f"local[{{cpus}}]",
                               "spark.sql.parquet.compression.codec": "zstd",
                               **({{"spark.local.dir": "/dev/shm/spark_local"}}
                                  if SHM else {{}}),
-                              "spark.driver.memory": "24g",
+                              "spark.driver.memory": "{heap_mb}m",
                               "spark.driver.extraJavaOptions":
-                                  "-Xms20g -XX:+AlwaysPreTouch"}})
+                                  "-Xms{heap_mb}m -XX:+AlwaysPreTouch"}})
 spark.sparkContext.setLogLevel("ERROR")
 
 def crawl(fixdir):
@@ -99,8 +100,15 @@ print(json.dumps({{"cpus": cpus, "wall_s": round(wall, 2),
 """
 
 
+def driver_heap_mb() -> int:
+    """Half the machine's physical memory: the driver JVM is the whole
+    local-mode cluster, and the rest stays for the Python workers, the
+    page cache and the OS (no swap is assumed)."""
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 >> 20
+
+
 def run_level(cpus: int, profile: str) -> dict:
-    code = CHILD.format(repo=REPO, profile=profile)
+    code = CHILD.format(repo=REPO, profile=profile, heap_mb=driver_heap_mb())
     out = subprocess.run(
         [sys.executable, "-c", code, str(cpus)],
         capture_output=True, text=True, timeout=3600,

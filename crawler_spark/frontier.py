@@ -153,15 +153,12 @@ def salt_plan(
 
 
 def budgets_bind(plan: DataFrame) -> bool:
-    """True iff some host's pending exceeds what its budget admits.
+    """True iff some host's pending exceeds what its budget admits (one
+    collect over the per-host plan).
 
-    When False, the rank window keeps every row — an O(pending)
-    shuffle+sort (and the pre-prune pass feeding it) that cannot cut
-    anything.  Callers skip both: the same cost-based plan choice as
-    AQE's broadcast threshold, decided from one tiny aggregate over the
-    per-host plan.  Wide-open rounds (politeness budgets >> per-host
-    pending — the common shape when thousands of cold hosts advance
-    together) pay zero scheduling shuffle.
+    Its only caller is perfbench's schedule replay, which skips the rank
+    window when this is False; the crawl round always ranks
+    (:func:`schedule`).
     """
     row = plan.agg(
         F.max(
@@ -230,7 +227,11 @@ def preprune(salted: DataFrame, margin: int = 4) -> DataFrame:
 def rank_budget(salted: DataFrame) -> DataFrame:
     """Stage 3: rank by (priority, seq) inside each salt; keep rank <=
     per-salt budget.  ORDER BY seq makes scheduling deterministic and
-    replays the reference's crawl order (SURVEY.md §3.3)."""
+    replays the reference's crawl order (SURVEY.md §3.3).
+
+    The cap is per salt: a host split over salts (more than
+    ``salt_rows_target`` pending rows) gets fewer than its budget when
+    uneven salts overflow ``salt_budget``, even if its pending fits."""
     w = Window.partitionBy("host_salt").orderBy("priority", "seq")
     return (
         salted.withColumn("__rank", F.row_number().over(w))
@@ -245,13 +246,11 @@ def schedule(
     salt_rows_target: int = 50_000,
     preprune_margin: int | None = None,
 ) -> DataFrame:
-    """Pick this round's fetch set under per-host budgets
-    (salt -> optional map-side pre-prune -> rank window; the window is
-    skipped entirely when no budget binds — see :func:`budgets_bind`)."""
-    plan = salt_plan(pending, budgets, salt_rows_target)
-    salted = salt_rows(pending, budgets, salt_rows_target, plan=plan)
-    if not budgets_bind(plan):
-        return salted.drop("n_salts", "salt_budget", "budget", "host_salt")
+    """Pick this round's fetch set under per-host budgets with one rule:
+    salt -> optional map-side pre-prune -> rank window, whether or not
+    any budget binds (the per-salt cap of :func:`rank_budget` applies
+    to every host)."""
+    salted = salt_rows(pending, budgets, salt_rows_target)
     if preprune_margin is not None:
         salted = preprune(salted, margin=preprune_margin)
     return rank_budget(salted)

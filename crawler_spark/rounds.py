@@ -29,6 +29,11 @@ nothing to roll back (the reference instead loses its entire run delta
 on crash, ``gdprCrawler.py:292-301``).  The lineage row records the
 snapshot of all six round tables, for time travel to any round's start.
 
+Schedule step: one rule every round (``frontier.schedule``) and no Spark
+action of its own — its persisted frames materialize inside the extract
+write, the fetch-join broadcast is gated on the manifest's pending row
+bound, and the fetch count is the adopted fetch_log part's rows.
+
 Frontier state is O(round) per round, not O(frontier):
 
 - the **pending set** is a merge-on-read table (``tables.MorTable``):
@@ -230,7 +235,7 @@ class CrawlRun:
         self._input_dfs: dict[str, DataFrame] = {}
         # set after a round that scheduled nothing: the next round must
         # verify pending emptiness with a real probe instead of trusting
-        # the manifest row-stat bound (see _pending_rows_bound)
+        # the manifest row-stat bound (see MorTable.rows_bound)
         self._force_probe = False
         # lazily computed: does any seeded authority use post-fetch keys?
         self._postfetch: bool | None = None
@@ -344,16 +349,6 @@ class CrawlRun:
         shutil.rmtree(os.path.join(self.state_dir, "scratch"), ignore_errors=True)
         self._checkout()
         return (self.last_committed_round() or 0) + 1
-
-    def _pending_rows_bound(self) -> int:
-        """Upper bound on visible pending rows from the manifest's part
-        row statistics — no Spark job.  sum(add-part rows) minus
-        sum(tombstone rows); tombstones are always derived from rows
-        read out of pending, so each deletes >= 1 add row."""
-        m = self.pending._manifest()
-        return sum(e["rows"] for e in m["parts"]) - sum(
-            e["rows"] for e in m["delete_parts"]
-        )
 
     def _has_postfetch(self) -> bool:
         """True iff any seeded authority defers X1 keying to the docpage
@@ -482,14 +477,14 @@ class CrawlRun:
         spark = self.spark
         pending_df = self.pending.read(spark)
         # manifest row statistics give an UPPER bound on visible pending
-        # rows with zero Spark jobs (every tombstone row came from a row
-        # scheduled out of pending, so it deletes at least one add row):
-        # bound <= 0 proves the frontier is drained; bound > 0 skips the
-        # per-round limit(1) probe job.  The one corner where the bound
-        # over-counts (a tombstone key shadowing a duplicate-keyed later
-        # add) is caught by _force_probe: a round that scheduled nothing
-        # makes the next round verify with a real probe.
-        if self._pending_rows_bound() <= 0:
+        # rows with zero Spark jobs (MorTable.rows_bound): bound <= 0
+        # proves the frontier is drained; bound > 0 skips the per-round
+        # limit(1) probe job.  The one corner where the bound over-counts
+        # (a tombstone key shadowing a duplicate-keyed later add) is
+        # caught by _force_probe: a round that scheduled nothing makes
+        # the next round verify with a real probe.
+        pending_bound = self.pending.rows_bound()
+        if pending_bound <= 0:
             return None
         if self._force_probe:
             # after a zero-schedule round, trust only a real probe
@@ -505,7 +500,7 @@ class CrawlRun:
         #    once per round.  (Slim rows — ~200 B each; at
         #    10^10-frontier scale the cache spills to executor disk,
         #    which is still one materialization instead of six
-        #    re-scans.)
+        #    re-scans.)  The extract write materializes it.
         pending_slim = pending_df.persist(StorageLevel.MEMORY_AND_DISK)
 
         # 2. politeness schedule (R1) in salted per-host partitions,
@@ -516,27 +511,19 @@ class CrawlRun:
         #    join + pandas UDF) evaluates ONLY the pruned candidates.
         #    Rows pruned out — including any not-yet-discovered
         #    robots-denied rows — simply stay pending and surface in a
-        #    later round when their (priority, seq) turn comes.
+        #    later round when their (priority, seq) turn comes.  One
+        #    rule: the window also ranks rounds where no budget binds.
         budgets = FR.host_budgets(pending_slim, self.seeds_df(), self.round_seconds)
-        plan = FR.salt_plan(pending_slim, budgets)
-        # cost-based window skip: when no host's pending exceeds its
-        # budget, the rank window admits everything — skip the O(round)
-        # shuffle+sort AND the pre-prune pass feeding it (the wide-open
-        # regime thousands of cold hosts advance in; one tiny plan
-        # aggregate decides, like AQE's broadcast threshold)
-        binding = FR.budgets_bind(plan)
-        salted = FR.salt_rows(pending_slim, budgets, plan=plan)
-        if binding:
-            salted = FR.preprune(salted, margin=self.preprune_margin)
+        salted = FR.preprune(
+            FR.salt_rows(pending_slim, budgets), margin=self.preprune_margin
+        )
         flagged = FR.robots_flag(salted, self.robots_df()).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         plan_cols = ("n_salts", "salt_budget", "budget", "host_salt")
         allowed = flagged.filter(F.col("__allowed")).drop("__allowed")
         denied = flagged.filter(~F.col("__allowed")).drop("__allowed", *plan_cols)
-        sched_all = (
-            FR.rank_budget(allowed) if binding else allowed.drop(*plan_cols)
-        )
+        sched_all = FR.rank_budget(allowed)
         if self.quota_budgets:
             # R3 quota gate on the politeness-scheduled set: deferred
             # rows are simply NOT scheduled (no tombstone), so they
@@ -550,11 +537,6 @@ class CrawlRun:
             sched_all = sched_all.drop("cost")
         scheduled = sched_all.persist(StorageLevel.MEMORY_AND_DISK)
         tick("plan_schedule")
-        # count once: it both materializes the persist and gates the
-        # broadcast hint (an unbounded round must degrade to a shuffle /
-        # storage-partitioned join, not OOM the driver)
-        n_sched = scheduled.count()
-        tick("schedule_count")
 
         # 3. fetch = equi-join vs pages (S3/S4).  The html column is the
         #    heavy payload: a plain left join would sort-merge-SHUFFLE the
@@ -575,9 +557,14 @@ class CrawlRun:
             "url", "authority", "doc_type", "depth", "priority", "seq",
             "title", "release_date", "doc_hash", "raw_hash", "retry_count",
         )
+        # broadcast gate: an unbounded round must degrade to a shuffle /
+        # storage-partitioned join, not OOM the driver.  The pending bound
+        # (no job) bounds the scheduled rows; only above the threshold —
+        # the 10^10-frontier shape, where it pays — are they counted.
         sched_side = (
             F.broadcast(sched_cols)
-            if n_sched <= self.broadcast_rows_max
+            if pending_bound <= self.broadcast_rows_max
+            or scheduled.count() <= self.broadcast_rows_max
             else sched_cols
         )
         hits = pages.join(sched_side, "url", "inner").select(
@@ -910,6 +897,7 @@ class CrawlRun:
                 if d and os.path.isdir(d):
                     self.documents.adopt_part(d, note, "extract_v1")
             delta_by_shard = _shard_counts(add_dir) if add_dir else {}
+            n_sched = adopted["fetch_log"]["rows"] if "fetch_log" in adopted else 0
             n_docs = 0
             if "metrics" in adopted:
                 met_dir = self.metrics.part_dir(adopted["metrics"])

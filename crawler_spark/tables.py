@@ -382,6 +382,15 @@ class MorTable(SnapshotTable):
         self._commit(seq, parts, note, delete_parts=dels)
         return None if add is None else self.part_dir(add)
 
+    def rows_bound(self) -> int:
+        """Upper bound on visible rows, no Spark job: manifest add rows
+        minus tombstone rows — valid while each tombstone keys a distinct
+        row visible when it was written; exact after a compaction."""
+        m = self._manifest()
+        return sum(e["rows"] for e in m["parts"]) - sum(
+            e["rows"] for e in m["delete_parts"]
+        )
+
     def base_parts(self) -> list[str]:
         """Current data part paths (introspection for O(round) tests)."""
         return [e["path"] for e in self._manifest()["parts"]]

@@ -171,3 +171,32 @@ def test_round_stages_every_part_from_one_slim_write(spark, tmp_path, monkeypatc
     assert r > 2
     assert post_docs, "the fixture's post-fetch-keyed docs were adopted"
     assert no_seen
+
+
+def test_round_runs_no_schedule_action(spark, tmp_path, monkeypatch):
+    """Scheduling runs no Spark action of its own: with ``count`` and
+    ``collect`` raising, round 2 still completes (its persisted frames
+    materialize inside the extract write, and the broadcast gate reads
+    the manifest's pending bound).  The round's fetch count is its
+    fetch_log part's rows, and lineage records the same number."""
+    run = _mk(spark, str(tmp_path / "noaction"))
+    run.init()
+    # round 1 also caches _has_postfetch's one per-run collect
+    assert run.round(1) is not None
+
+    def no_action(self, *args, **kwargs):
+        raise AssertionError("the round ran a DataFrame action")
+
+    with monkeypatch.context() as m:
+        frame = type(spark.range(1))
+        m.setattr(frame, "count", no_action)
+        m.setattr(frame, "collect", no_action)
+        st = run.round(2)
+    assert st is not None and st["scheduled"] > 0
+    assert "schedule_count" not in st["phases"]
+    assert st["scheduled"] == run.fetch_log.last_part()["rows"]
+    fetched = {
+        r["fetched"]
+        for r in run.lineage.read(spark).filter("round_id = 2").collect()
+    }
+    assert fetched == {st["scheduled"]}

@@ -118,3 +118,25 @@ def test_overwrite_writes_a_seq_part(spark, tmp_path):
     assert files and all("__seq" in pq.read_schema(f).names for f in files)
     t.commit_delta(spark, deletes=df([(1, 0, "_")]).select("k", "retry"))
     assert _rows(spark, t) == [(2, 0, "b")]
+
+
+def test_rows_bound_covers_visible_rows(spark, tmp_path):
+    """rows_bound() reads only manifest statistics, and the round gates
+    its fetch-join broadcast on it without a count, so it must never
+    under-count: adds, tombstones, a re-add of a tombstoned key, then a
+    compaction (after which it is exact)."""
+    t = _mk(tmp_path, compact_after=3, compact_min_rows=1 << 40)
+    df = lambda rows: spark.createDataFrame(rows, SCHEMA)
+    keys = lambda ks: df([(k, 0, "_") for k in ks]).select("k", "retry")
+    steps = [
+        dict(adds=df([(i, 0, "a") for i in range(5)])),
+        dict(deletes=keys([0, 1])),
+        dict(adds=df([(0, 0, "re-added")])),
+        dict(adds=df([(9, 0, "b")]), deletes=keys([2])),
+        dict(deletes=keys([0])),  # third tombstone part: compacts
+    ]
+    for step in steps:
+        t.commit_delta(spark, **step)
+        assert t.rows_bound() >= t.read(spark).count()
+    assert t._manifest()["delete_parts"] == []
+    assert t.rows_bound() == t.read(spark).count() == 3

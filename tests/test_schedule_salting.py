@@ -5,6 +5,8 @@ scheduler splits each hot host over S salted partitions but must never
 schedule more than the host's politeness budget in total.
 """
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from crawler_spark import frontier as FR
@@ -58,6 +60,25 @@ def test_cold_host_unaffected_by_salting(spark):
     budgets = _budgets(spark, "cold.example.eu", 12)
     out = FR.schedule(pending, budgets, salt_rows_target=50_000)
     assert out.count() == 5  # all under budget, single salt
+
+
+def test_fitting_host_split_over_salts_is_capped_per_salt(spark):
+    """One rule for every host: a host whose whole pending set fits its
+    budget, but is split over salts, still gets the per-salt cap — no
+    salt schedules more than salt_budget, so uneven salts schedule
+    fewer rows than the budget admits."""
+    host = "split.example.eu"
+    # url_hash = i*i: residues mod 10 are uneven (1, 4, 6, 9 hold 100
+    # rows each; 0 and 5 hold 50)
+    pending = _pending(spark, host, 500).withColumn(
+        "url_hash", (F.col("seq") - 1000) * (F.col("seq") - 1000)
+    )
+    budgets = _budgets(spark, host, 500)
+    # n_salts = min(ceil(500/50), 32, 500) = 10 -> salt_budget = 50
+    out = FR.schedule(pending, budgets, salt_rows_target=50)
+    per_salt = Counter(r["url_hash"] % 10 for r in out.collect())
+    assert max(per_salt.values()) <= 500 // 10
+    assert sum(per_salt.values()) == 6 * 50
 
 
 def test_budget_one_schedules_exactly_one(spark):
