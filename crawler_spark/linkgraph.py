@@ -180,11 +180,19 @@ def connected_components(
     (see :func:`crawler_spark.fixpoint.release`).  Raises
     ``RuntimeError`` if labels still change after ``max_rounds``.
     """
-    e = edges.select(
-        F.col(src_col).cast("long").alias("u"),
-        F.col(dst_col).cast("long").alias("v"),
+    # both directions of every edge from ONE read of ``edges`` (a union
+    # would plan the upstream pipeline twice)
+    src, dst = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
+    sym = checkpoint(
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(src.alias("u"), dst.alias("v")),
+                    F.struct(dst.alias("u"), src.alias("v")),
+                )
+            ).alias("e")
+        ).select("e.u", "e.v")
     )
-    sym = checkpoint(e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
 
     def step(labels: DataFrame) -> DataFrame:
         nbr = (

@@ -10,14 +10,16 @@ chain advances one page per round while thousands of chains/hosts advance
 in parallel — the reference's own loop structure, parallelized across its
 outer dimension (SURVEY.md §7.3.2).
 
-Commit protocol per round: the round writes twice — the extract scratch
-(``sink=doc|rest``) and ONE slim write partitioned by sink that holds
-every round table's part (seen, fetch_log, done, pending adds and
-tombstones, metrics, post-fetch-keyed documents).  Each table takes its
-part by rename (``adopt_part``; pending by one ``commit_delta`` of two
-adopted parts), the documents table also adopts the extract's
+Commit protocol per round: the round runs two Spark writes — the
+extract scratch (``sink=doc|rest``) and ONE slim write partitioned by
+sink that holds every round table's part (seen, fetch_log, done, pending
+adds and tombstones, metrics, post-fetch-keyed documents).  Each table
+takes its part by rename (``adopt_part``; pending by one ``commit_delta``
+of two adopted parts), the documents table also adopts the extract's
 ``sink=doc``, and the driver reads the document count and per-shard add
-counts from the adopted parts with pyarrow.  Every table only *stages*
+counts from the adopted parts with pyarrow — and writes the lineage
+rows, which it already holds, with pyarrow too (``init()`` runs one
+Spark write, the seed delta).  Every table only *stages*
 snapshots (an immutable manifest each; nothing on disk points at it
 yet).  The round's one commit point is an atomic ``os.replace`` of
 ``state_dir/CATALOG``, naming every table's snapshot, the per-shard
@@ -83,10 +85,12 @@ import json
 import os
 import shutil
 import time
-from datetime import date
+from datetime import date, datetime, timezone
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -352,15 +356,13 @@ class CrawlRun:
 
     def _has_postfetch(self) -> bool:
         """True iff any seeded authority defers X1 keying to the docpage
-        (registry ``title_at_docpage`` — slovenia's flow).  One tiny
-        distinct-collect per run, cached."""
+        (registry ``title_at_docpage`` — slovenia's flow).  One driver-side
+        read of the seeds' authority column per run (no job), cached."""
         if self._postfetch is None:
             from .extract import REGISTRY
 
-            auths = [
-                r["authority"]
-                for r in self.seeds_df().select("authority").distinct().collect()
-            ]
+            seeds = pq.read_table(self.seeds_path, columns=["authority"])
+            auths = pc.unique(seeds["authority"]).to_pylist()
 
             def flag(a: str) -> bool:
                 prof = REGISTRY.get(a)
@@ -397,18 +399,18 @@ class CrawlRun:
         for pid, n in (delta_by_shard or {}).items():
             offsets[pid] = offsets.get(pid, 0) + n
         sids = [t.current_snapshot_id() or "" for _, t in self.round_tables]
+        # the driver holds every row: a pyarrow part, no Spark job
+        # (committed_ts is a UTC timestamp, which Spark reads as
+        # TimestampType)
+        now = datetime.now(timezone.utc)
         rows = [
-            (round_id, *sids, pid, off, fetched, extracted)
+            (round_id, *sids, pid, off, fetched, extracted, now)
             for pid, off in sorted(offsets.items())
-        ] or [(round_id, *sids, 0, 0, fetched, extracted)]
-        # committed_ts (the last LINEAGE field) is stamped by Spark.  One
-        # explicit slice writes one file, the fastest variant measured
-        # (``.coalesce(1)`` on an Arrow local relation costs ~4 s a write)
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1),
-            T.StructType(S.LINEAGE.fields[:-1]),
-        ).withColumn("committed_ts", F.current_timestamp())
-        self.lineage.append(df, note=f"round-{round_id}")
+        ] or [(round_id, *sids, 0, 0, fetched, extracted, now)]
+        tbl = pa.Table.from_arrays(
+            [pa.array(col) for col in zip(*rows)], names=S.LINEAGE.fieldNames()
+        )
+        self.lineage.append(tbl, note=f"round-{round_id}")
         catalog = {
             "round_id": round_id,
             "snapshots": {name: t.head for name, t in self._catalog_tables()},

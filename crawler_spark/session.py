@@ -42,6 +42,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the shuffles of persisted plans too: the round's
+        # cached schedule comes out of the rank window's shuffle, and
+        # without this every slim sink derived from it writes
+        # spark.sql.shuffle.partitions files a round
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # html payloads are large; keep Arrow batches bounded so the
         # fetch/extract mapInPandas stage stays within executor memory.

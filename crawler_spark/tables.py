@@ -5,13 +5,16 @@ time-travel.  The sandbox has no iceberg-spark-runtime jar, so this module
 implements the same *discipline* over plain parquet: every write lands an
 immutable data directory plus an immutable manifest JSON listing the
 directories that make up the new snapshot, and moves the table's
-in-memory ``head`` to it.  A part is written by the table (projected to
-the declared schema) or adopted by RENAME from a directory an upstream
+in-memory ``head`` to it.  A part is written by the table (in the
+declared schema) or adopted by RENAME from a directory an upstream
 write produced (``adopt_part``, Iceberg's ``add_files``) — the way
-``rounds.CrawlRun`` stages every round table's part.  Readers resolve a
-snapshot (the head or one by id) to a list of parquet paths and hand
-them to ``spark.read.parquet`` — so predicate pushdown, column pruning
-and partition-parallel scans all still apply.
+``rounds.CrawlRun`` stages every round table's part.  The table writes
+a DataFrame with Spark, and a ``pyarrow.Table`` (rows the driver
+already holds, such as the lineage rows) with pyarrow and no Spark job,
+the way Iceberg's committer writes its own commit metadata.  Readers
+resolve a snapshot (the head or one by id) to a list of parquet paths
+and hand them to ``spark.read.parquet`` — so predicate pushdown, column
+pruning and partition-parallel scans all still apply.
 
 A write only *stages* its snapshot: nothing on disk points at it until
 the owner commits.  ``rounds.CrawlRun`` commits all of its tables at once
@@ -53,6 +56,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # the manifest of a table with no snapshot: the first commit gets seq 0
 _EMPTY = {"seq": -1, "parts": [], "delete_parts": []}
@@ -163,8 +167,20 @@ class SnapshotTable:
             entry["layout"] = layout
         return self._commit(seq, m["parts"] + [entry], note)
 
-    def append(self, df: DataFrame, note: str = "append") -> str:
-        return self._add_part(self._write_part(self.project(df)), note)
+    def append(self, df: DataFrame | pa.Table, note: str = "append") -> str:
+        """Stage ``df`` as a new part: a DataFrame is written by Spark, a
+        ``pyarrow.Table`` (rows the driver already holds, e.g. a lineage
+        row per shard) by the driver with no Spark job."""
+        if not isinstance(df, pa.Table):
+            return self._add_part(self._write_part(self.project(df)), note)
+        part = os.path.join("data", uuid.uuid4().hex)
+        os.makedirs(os.path.join(self.root, part))
+        # the cast is project()'s boundary check: names, types, nullability
+        pq.write_table(
+            df.cast(to_arrow_schema(self.schema)),
+            os.path.join(self.root, part, "part-00000.parquet"),
+        )
+        return self._add_part(part, note)
 
     def append_read(self, spark: SparkSession, df: DataFrame, note: str = "append"):
         """Append ``df`` and return (snapshot_id, re-read of the part just

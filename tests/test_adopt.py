@@ -1,7 +1,8 @@
-"""Adopted-part commits: a round writes twice — the extract scratch and
-one slim write partitioned by sink — and every round table takes its
-part from one of those writes by RENAME (tables.adopt_part) instead of
-a write of its own (Iceberg's add_files shape).  The documents table
+"""Adopted-part commits: a round runs two Spark writes — the extract
+scratch and one slim write partitioned by sink — and every round table
+takes its part from one of those writes by RENAME (tables.adopt_part)
+instead of a write of its own (Iceberg's add_files shape); the lineage
+rows, which the driver holds, are a pyarrow part.  The documents table
 adopts the ``sink=doc`` extract partition (and the post-fetch-keyed
 documents, written in the same layout), so the payload is never read
 back and re-written.
@@ -9,20 +10,27 @@ back and re-written.
 The reference writes each document's bytes exactly once too
 (pygdpr/models/dpa/austria/__init__.py:127-148); byte-identity of the
 adopted rows against the sequential oracle is enforced by the e2e
-suites — this file pins the *mechanics*: one slim write per round and
-no other table write than lineage, layout-tagged manifest entries, one
-multi-path scan per layout, time travel across adopted snapshots, and
+suites — this file pins the *mechanics*: one Spark write in ``init()``
+and two per round, no table write of its own in a round, the lineage
+part's schema, few files per slim sink, layout-tagged manifest entries,
+one multi-path scan per layout, time travel across adopted snapshots, and
 mixed plain+adopted manifests (plain parts come only from direct
 appends outside the round) reading as one frame.
 """
 
 import os
+import time
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.readwriter import DataFrameWriter
 
+from crawler_spark import schema as S
 from crawler_spark.fixtures import AS_OF, fixture_dir
 from crawler_spark.rounds import CrawlRun
-from crawler_spark.tables import SnapshotTable
+from crawler_spark.tables import SnapshotTable, _part_files
 
 
 def _mk(spark, state_dir):
@@ -104,8 +112,9 @@ SLIM_TABLES = ("seen", "fetch_log", "done", "metrics")
 
 
 def test_round_stages_every_part_from_one_slim_write(spark, tmp_path, monkeypatch):
-    """During a round, ``_write_part`` runs only for the lineage append
-    (no Bloom is active and no compaction fires here); every seen,
+    """During a round, ``_write_part`` runs for no table (no Bloom is
+    active, no compaction fires here and lineage is a driver-side
+    pyarrow part); every seen,
     fetch_log, done, metrics and pending part of the round is a renamed
     ``sink=<table>`` partition of the round's one slim write, and the
     round's ``seen_delta`` is its seen part's row count (0 with none)."""
@@ -140,7 +149,7 @@ def test_round_stages_every_part_from_one_slim_write(spark, tmp_path, monkeypatc
         st = run.round(r)
         if st is None:
             break
-        assert writes == ["lineage"], (r, writes)
+        assert writes == [], (r, writes)
         slim = os.path.join(state, "scratch", f"round-{r}", "slim")
         new = {t: {p: e for p, e in parts(getattr(run, t)).items() if p not in before[t]}
                for t in SLIM_TABLES}
@@ -175,14 +184,13 @@ def test_round_stages_every_part_from_one_slim_write(spark, tmp_path, monkeypatc
 
 def test_round_runs_no_schedule_action(spark, tmp_path, monkeypatch):
     """Scheduling runs no Spark action of its own: with ``count`` and
-    ``collect`` raising, round 2 still completes (its persisted frames
-    materialize inside the extract write, and the broadcast gate reads
-    the manifest's pending bound).  The round's fetch count is its
-    fetch_log part's rows, and lineage records the same number."""
+    ``collect`` raising, rounds 1 and 2 still complete (the persisted
+    frames materialize inside the extract write, the broadcast gate
+    reads the manifest's pending bound, and ``_has_postfetch`` reads
+    the seeds with pyarrow).  The round's fetch count is its fetch_log
+    part's rows, and lineage records the same number."""
     run = _mk(spark, str(tmp_path / "noaction"))
     run.init()
-    # round 1 also caches _has_postfetch's one per-run collect
-    assert run.round(1) is not None
 
     def no_action(self, *args, **kwargs):
         raise AssertionError("the round ran a DataFrame action")
@@ -191,6 +199,7 @@ def test_round_runs_no_schedule_action(spark, tmp_path, monkeypatch):
         frame = type(spark.range(1))
         m.setattr(frame, "count", no_action)
         m.setattr(frame, "collect", no_action)
+        assert run.round(1) is not None
         st = run.round(2)
     assert st is not None and st["scheduled"] > 0
     assert "schedule_count" not in st["phases"]
@@ -200,3 +209,82 @@ def test_round_runs_no_schedule_action(spark, tmp_path, monkeypatch):
         for r in run.lineage.read(spark).filter("round_id = 2").collect()
     }
     assert fetched == {st["scheduled"]}
+
+
+@pytest.fixture(scope="module")
+def counted_crawl(spark, tmp_path_factory):
+    """A full crawl with every Spark parquet write counted per step:
+    ``init()``, then each ``round()`` call up to the drained one."""
+    run = _mk(spark, str(tmp_path_factory.mktemp("counted")))
+    writes = []
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, *args, **kwargs):
+        writes[-1] += 1
+        return orig(self, *args, **kwargs)
+
+    t0 = time.time()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        writes.append(0)
+        run.init()
+        for r in range(1, 50):
+            writes.append(0)
+            if run.round(r) is None:
+                break
+    return run, writes, (t0, time.time())
+
+
+def test_init_runs_one_spark_write_and_a_round_two(counted_crawl):
+    """The seed delta is init()'s only Spark write; a round's are the
+    extract scratch and the slim write.  Lineage rows are written by the
+    driver, and the drained round() call writes nothing."""
+    run, writes, _ = counted_crawl
+    n_rounds = run.last_committed_round()
+    assert n_rounds > 2
+    assert writes == [1] + [2] * n_rounds + [0]
+
+
+def test_lineage_part_keeps_its_schema(spark, counted_crawl):
+    """Every lineage part is a driver-written file in ``S.LINEAGE``'s
+    Arrow schema and reads back with its names and types; committed_ts
+    never decreases from round to round, and the latest round's offsets
+    sum to the catalog's enqueued total."""
+    run, _, (t0, t1) = counted_crawl
+    parts = run.lineage._manifest()["parts"]
+    assert len(parts) == run.last_committed_round() + 1
+    for e in parts:
+        (f,) = _part_files(run.lineage.part_dir(e))
+        assert pq.read_schema(f).remove_metadata() == to_arrow_schema(S.LINEAGE)
+    lin = run.lineage.read(spark)
+    assert [(f.name, f.dataType) for f in lin.schema.fields] == [
+        (f.name, f.dataType) for f in S.LINEAGE.fields
+    ]
+    rows = lin.orderBy("round_id", "partition_id").collect()
+    assert sum(e["rows"] for e in parts) == len(rows)
+    ts = {}
+    for r in rows:
+        ts.setdefault(r["round_id"], set()).add(r["committed_ts"])
+    assert sorted(ts) == list(range(run.last_committed_round() + 1))
+    assert all(len(v) == 1 for v in ts.values()), "one committed_ts per round"
+    stamps = [min(ts[k]) for k in sorted(ts)]
+    assert stamps == sorted(stamps)
+    assert t0 - 1 <= stamps[0].timestamp() <= stamps[-1].timestamp() <= t1 + 1
+    last = max(ts)
+    offsets = [r["frontier_offset"] for r in rows if r["round_id"] == last]
+    assert sum(offsets) == run._enqueued_total() > 0
+
+
+def test_slim_sinks_are_coalesced(spark, counted_crawl):
+    """AQE coalesces the persisted schedule's rank shuffle too, so no
+    round's done or fetch_log part holds one file per shuffle
+    partition."""
+    run, _, _ = counted_crawl
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert partitions == 8
+    for table in (run.done, run.fetch_log):
+        parts = table._manifest()["parts"]
+        assert len(parts) > 2
+        for e in parts:
+            n = len(_part_files(table.part_dir(e)))
+            assert 1 <= n < partitions, (table.root, e, n)

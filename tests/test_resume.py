@@ -6,10 +6,11 @@ The reference loses its whole run delta on crash (seen-set flushed only
 at end, gdprCrawler.py:292-301); the engine's per-round catalog commit
 makes any crash replay idempotent.  The crash-point cases raise in
 round 3 after its one slim write but before any table adopts its part,
-right after each table stages its part (by rename from that write, or
-the URL Bloom / lineage write), between pending's add and tombstone
-renames, just before its lineage row, after the lineage append but
-before the catalog write, or inside ``init()`` — and require all six
+right after each table stages its part (by rename from that write, the
+URL Bloom write, or the driver-side lineage part), between pending's
+add and tombstone renames, just before its lineage row, after the
+lineage append but before the catalog write, or inside ``init()``
+after the seed delta or after its lineage part — and require all six
 round tables, row counts included, to come out equal to an
 uninterrupted run.  Each case restarts two ways:
 ``resume()`` then rounds, and a plain ``run()`` (what the bench and the
@@ -237,27 +238,46 @@ def test_crash_point_resumes_to_uninterrupted_state(
     assert _final_state(resumed) == uninterrupted
 
 
-@pytest.mark.parametrize("restart", RESTARTS)
-def test_crash_in_init_replays_the_seed(
-    spark, tmp_path, monkeypatch, uninterrupted, restart
-):
-    """The seed delta is staged but round 0's catalog is not written:
-    the restart sees an empty state dir and seeds again."""
+def _crash_in_init(spark, tmp_path, monkeypatch, uninterrupted, restart, table, method):
+    """``init()`` dies right after ``table.method`` stages its snapshot,
+    before round 0's catalog is written: the restart sees an empty state
+    dir, seeds again and reaches the uninterrupted state."""
     state = str(tmp_path / "crash")
     run = _mk(spark, state)
-    orig = run.pending.commit_delta
+    target = getattr(run, table)
+    orig = getattr(target, method)
 
     def crashing(*args, **kwargs):
         orig(*args, **kwargs)
-        raise Crash("commit_delta")
+        raise Crash(method)
 
-    monkeypatch.setattr(run.pending, "commit_delta", crashing)
+    monkeypatch.setattr(target, method, crashing)
     with pytest.raises(Crash):
         run.init()
+    assert target.head is not None
     assert not os.path.exists(os.path.join(state, CATALOG))
 
     resumed = _restart(spark, state, restart, 1)
     assert _final_state(resumed) == uninterrupted
+
+
+@pytest.mark.parametrize("restart", RESTARTS)
+def test_crash_in_init_replays_the_seed(
+    spark, tmp_path, monkeypatch, uninterrupted, restart
+):
+    """The seed delta is staged, its lineage row is not."""
+    _crash_in_init(spark, tmp_path, monkeypatch, uninterrupted, restart,
+                   "pending", "commit_delta")
+
+
+@pytest.mark.parametrize("restart", RESTARTS)
+def test_crash_in_init_after_lineage(
+    spark, tmp_path, monkeypatch, uninterrupted, restart
+):
+    """The seed delta and round 0's driver-written lineage part are
+    staged; only the catalog is missing."""
+    _crash_in_init(spark, tmp_path, monkeypatch, uninterrupted, restart,
+                   "lineage", "append")
 
 
 def test_time_travel_reads(spark, tmp_path):
